@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.col
   * partitioning: `Dataset.checkpoint` captures
   * `executedPlan.outputPartitioning` into the `LogicalRDD` leaf, and an
   * un-executed `AdaptiveSparkPlanExec` reports `UnknownPartitioning(0)`
-  * (measured — tools/CkptPartProbe, and plans/r17/g52_hits_before.txt
+  * (pinned by `IterPlanSpec`, and plans/r17/g52_hits_before.txt
   * shows every `Scan ExistingRDD` leaf as `UnknownPartitioning(0)`).
   * Consequence: every round re-Exchanges the LOOP-STATIC tables (the
   * edge set, the vertex set) from scratch — at lake scale that is one
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions.col
   *
   * With AQE disabled the non-adaptive physical plan's concrete
   * `hashpartitioning(k, P)` and its output ordering ARE captured across
-  * the checkpoint (same probe), so a loop whose static tables are
+  * the checkpoint (same spec), so a loop whose static tables are
   * repartitioned by their join key once (`keyed`) runs every round's
   * join zero-exchange and mostly zero-sort: the only per-round Exchange
   * left is the message aggregation itself — the §1.1 fundamental
@@ -42,43 +42,31 @@ import org.apache.spark.sql.functions.col
   */
 object IterPlan {
 
+  /** Loop shuffle width — the one width policy for iterative loops. With
+    * AQE off nothing coalesces the loop's vertex-/frontier-sized
+    * exchanges, so running them at the session's scan-sized width
+    * (cluster-sized in production, cpus on the bench) pays a full task
+    * wave per stage per round for partitions holding a few KB — measured
+    * 2.5× on the matching family at sf0.1. The width is derived from the
+    * session width (quarter, floor 8), not a constant: a cluster-width
+    * session keeps a proportional loop width.
+    */
+  private[graft] def loopWidth(spark: SparkSession): String =
+    math.max(8, spark.conf.get("spark.sql.shuffle.partitions").toInt / 4).toString
+
   /** Run `f` (an iterative plan CONSTRUCTION, including its per-round
     * `lckpt` calls and any per-round summary actions) with AQE disabled
-    * so checkpoint boundaries preserve partitioning; restores the
-    * session value on exit.
+    * so checkpoint boundaries preserve partitioning, at [[loopWidth]];
+    * restores the session conf on exit ([[Conf.scoped]]).
+    *
+    * Assumes no other query runs on the session concurrently: the scope
+    * is session-global, so a concurrent query would plan with AQE off
+    * at loop width too.
     */
-  /** Loop shuffle width. With AQE off nothing coalesces the loop's
-    * vertex-/frontier-sized exchanges, so running them at the session's
-    * scan-sized width (cluster-sized in production, cpus on the bench)
-    * pays a full task wave per stage per round for partitions holding a
-    * few KB — measured 2.5× on the matching family at sf0.1. The width
-    * is derived from the session width (quarter, floor 8), not a
-    * constant: a cluster-width session keeps a proportional loop width
-    * (the SccLabels/KCore "size the shuffle width to the iteration"
-    * discipline, made scale-adaptive); `SPARK_GRAFT_ITER_WIDTH`
-    * overrides for A/B.
-    */
-  private def loopWidth(spark: SparkSession): String =
-    sys.env.getOrElse("SPARK_GRAFT_ITER_WIDTH",
-      math.max(8, spark.conf.get("spark.sql.shuffle.partitions").toInt / 4).toString)
-
-  def coPartitioned[A](spark: SparkSession)(f: => A): A = {
-    // dev A/B switch: SPARK_GRAFT_ITER_AQE=1 leaves AQE on inside the
-    // loops (measures what the scope itself buys/costs)
-    if (sys.env.get("SPARK_GRAFT_ITER_AQE").contains("1")) f
-    else {
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val widthKey = "spark.sql.shuffle.partitions"
-      val prevAqe = spark.conf.get(aqeKey)
-      val prevWidth = spark.conf.get(widthKey)
-      spark.conf.set(aqeKey, "false")
-      spark.conf.set(widthKey, loopWidth(spark))
-      try f finally {
-        spark.conf.set(aqeKey, prevAqe)
-        spark.conf.set(widthKey, prevWidth)
-      }
-    }
-  }
+  def coPartitioned[A](spark: SparkSession)(f: => A): A =
+    Conf.scoped(spark)(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> loopWidth(spark))(f)
 
   /** Dev-only per-round plan dump (`SPARK_GRAFT_ITER_DEBUG=1`): the
     * final query plan hides every round behind its checkpoint leaf, so

@@ -540,9 +540,10 @@ object Dedup {
     // the dup-gram set is CHECKPOINTED: OptimizeSkewedJoin only splits a
     // join whose sides are bare Sort(shuffle-stage) reads — the
     // frequency aggregate sitting between the right sort and its shuffle
-    // blocked the split (measured: HotKeyProbe, 8M-row hot gram — split
-    // fires only off the materialized set, 4.8-7.4 s window / 5.2-6.5 s
-    // inline agg / 3.4 s checkpointed+split). The set holds one row per
+    // blocked the split (measured on an 8M-row hot gram, VERDICT.md r17
+    // ledger row p115/p64/p93/p45 — split fires only off the
+    // materialized set, 4.8-7.4 s window / 5.2-6.5 s inline agg / 3.4 s
+    // checkpointed+split). The set holds one row per
     // DISTINCT duplicated gram — far below the occurrence table.
     val dupH = occ.groupBy("h").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 2).select("h")

@@ -45,9 +45,7 @@ object DensestSubgraph {
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import org.apache.spark.sql.graft.CatalystBridge
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graft.core.IterPlan.coPartitioned(spark) {
+    graft.core.IterPlan.coPartitioned(spark) {
       import graft.core.IterPlan.IterDatasetOps
       // keyed("u") + IterPlan capture: the per-round u-side restriction
       // join runs zero-exchange off the checkpointed partitioning
@@ -103,6 +101,6 @@ object DensestSubgraph {
         StructField("is_best", IntegerType, nullable = false)))
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows.toSeq, 1), schema)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 }

@@ -75,13 +75,12 @@ object DfConnectedComponents {
   def run(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import org.apache.spark.sql.graft.CatalystBridge
-    // iterative rounds re-shuffle a shrinking edge set many times — size
-    // the shuffle width to the iteration, not the session scan width,
-    // and restore afterwards (the loop materializes eagerly per round,
-    // so no lazy plan escapes with the narrow setting)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    // iterative rounds re-shuffle a shrinking edge set many times — run
+    // them at the loop width, not the session scan width (the loop
+    // materializes eagerly per round, so no lazy plan escapes with the
+    // narrow setting); AQE stays on: no checkpoint partitioning to keep
+    graft.core.Conf.scoped(spark)(
+        "spark.sql.shuffle.partitions" -> graft.core.IterPlan.loopWidth(spark)) {
       var e = edges.select(col("src").as("u"), col("dst").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
@@ -106,7 +105,7 @@ object DfConnectedComponents {
         .unionByName(e.select(col("v").as("id"), col("v").as("component")))
         .distinct()
         .lckpt()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** INCREMENTAL CC maintenance: merge a delta wave of edges into an

@@ -46,9 +46,7 @@ object KCore {
     val spark = edges.sparkSession
     import org.apache.spark.sql.graft.CatalystBridge
     import spark.implicits._
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graft.core.IterPlan.coPartitioned(spark) {
+    graft.core.IterPlan.coPartitioned(spark) {
       import graft.core.IterPlan.IterDatasetOps
       // canonicalize: undirected edge identity is the unordered pair, so
       // both orientations collapse to one row and self-loops drop (a
@@ -113,6 +111,6 @@ object KCore {
           coalesce(col("core_deg"), lit(0)).as("core_deg"))
         .unionByName(removedAll
           .select(col("key"), col("peel_round"), lit(0).as("core_deg")))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 }

@@ -505,8 +505,13 @@ object Matching {
         val sel = roundSelect(e).lckpt(eager = false)
         val matchedV = sel.select(col("u").as("x"))
           .unionAll(sel.select(col("v").as("x"))).distinct()
-        // u probe pinned (zero-exchange), v probe stats-chosen — see
-        // weightedTrajectory's residual note
+        // u probe pinned, v probe stats-chosen (see weightedTrajectory's
+        // residual note). The u probe stays zero-exchange in every round
+        // only while the v probe broadcasts: a broadcast anti-join keeps
+        // eNext's hash(u) across the checkpoint (IterPlan.debugDump, g62
+        // and g66 at sf0.001, rounds 1-3). If the stats pick a sort-merge
+        // v probe instead, its Exchange leaves eNext hash(v)-partitioned
+        // and each later round's u probe re-exchanges the residual edges.
         val eNext = e.hint("merge")
           .join(matchedV.select(col("x").as("u")), Seq("u"), "left_anti")
           .join(matchedV.select(col("x").as("v")), Seq("v"), "left_anti")

@@ -67,12 +67,7 @@ object SccLabels {
     import spark.implicits._
     import graft.core.IterPlan.IterDatasetOps
 
-    // iterative rounds re-shuffle a shrinking delta many times — size
-    // the shuffle width to the iteration, not the session scan width
-    // (the DfConnectedComponents discipline); restored in the finally
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try graft.core.IterPlan.coPartitioned(spark) {
+    graft.core.IterPlan.coPartitioned(spark) {
 
     val ed0 = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst") && col("src").isNotNull && col("dst").isNotNull)
@@ -123,6 +118,5 @@ object SccLabels {
     }
     rows.toSeq.toDF("round", "n_certified", "f_mass", "b_mass")
     }
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 }

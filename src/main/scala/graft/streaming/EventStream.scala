@@ -45,6 +45,34 @@ object EventStream {
     graft.sources.TpchGraph.normalizeTs(stream)
   }
 
+  /** Streaming state partition count: the shuffle width a stateful query
+    * fixes at start. It should track KEY cardinality (event_type × open
+    * windows — tens of keys), not the batch-side shuffle width: every
+    * state partition pays a store commit per microbatch regardless of
+    * data.
+    */
+  private[streaming] val StatePartitions = 4
+
+  /** Start `result` as a memory-sink query named `name` at
+    * [[StatePartitions]], drain it synchronously, stop it and return the
+    * sink table. Only `start()` runs in the conf scope: the query's cloned
+    * session captures the width there.
+    */
+  private def drainToMemory(spark: SparkSession, name: String, outputMode: String)
+                           (result: => Dataset[_]): DataFrame = {
+    val q = graft.core.Conf.scoped(spark)(
+        "spark.sql.shuffle.partitions" -> StatePartitions.toString) {
+      result.writeStream
+        .outputMode(outputMode)
+        .format("memory")
+        .queryName(name)
+        .start()
+    }
+    try q.processAllAvailable()
+    finally q.stop()
+    spark.table(name)
+  }
+
   /** Hourly tumbling-window counts + value sums per event type. */
   def hourlyAgg(events: DataFrame): DataFrame =
     events
@@ -60,26 +88,12 @@ object EventStream {
     * result table (identical to the batch answer — verified by the
     * DuckDB oracle).
     */
-  def runHourlyStream(spark: SparkSession, sfDir: String,
-                      statePartitions: Int = 4): DataFrame = {
+  def runHourlyStream(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = eventSource(spark, sfDir)
-    val name = "graft_stream_hourly"
-    // streaming state partition count is fixed at query start and should
-    // track KEY cardinality (event_type × open windows — tens of keys),
-    // not the batch-side shuffle width: every state partition pays a
-    // store commit per microbatch regardless of data
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val q =
-      try hourlyAgg(stream).writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy("hour_start", "event_type")
+    val drained = drainToMemory(spark, "graft_stream_hourly", "complete") {
+      hourlyAgg(stream)
+    }
+    drained.orderBy("hour_start", "event_type")
   }
 
   /** Spark's BUILT-IN stateful stream dedup (`dropDuplicates` over the
@@ -92,22 +106,12 @@ object EventStream {
     * operator guarantees. Bounded input keeps state finite here; a
     * production stream bounds it with `dropDuplicatesWithinWatermark`.
     */
-  def runDistinctStream(spark: SparkSession, sfDir: String,
-                        statePartitions: Int = 4): DataFrame = {
+  def runDistinctStream(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = eventSource(spark, sfDir)
-    val name = "graft_stream_distinct"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val q =
-      try stream.dropDuplicates("user_id", "event_type").writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
+    val drained = drainToMemory(spark, "graft_stream_distinct", "append") {
+      stream.dropDuplicates("user_id", "event_type")
+    }
+    drained
       .groupBy("event_type").agg(count(lit(1)).as("n_users"))
       .orderBy("event_type")
   }
@@ -122,22 +126,12 @@ object EventStream {
     * which is what the oracle checks; in production the delay is the
     * source's real duplicate-lag bound.
     */
-  def runDistinctWithinWatermarkStream(spark: SparkSession, sfDir: String,
-                                       statePartitions: Int = 4): DataFrame = {
+  def runDistinctWithinWatermarkStream(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = eventSource(spark, sfDir).withWatermark("ts", "3650 days")
-    val name = "graft_stream_distinct_wm"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val q =
-      try stream.dropDuplicatesWithinWatermark("user_id", "event_type").writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
+    val drained = drainToMemory(spark, "graft_stream_distinct_wm", "append") {
+      stream.dropDuplicatesWithinWatermark("user_id", "event_type")
+    }
+    drained
       .groupBy("event_type").agg(count(lit(1)).as("n_users"))
       .orderBy("event_type")
   }
@@ -157,8 +151,7 @@ object EventStream {
     * users, milli-exact value sum) — identical to the DuckDB interval
     * join over the same parquet.
     */
-  def runIntervalJoinStream(spark: SparkSession, sfDir: String,
-                            statePartitions: Int = 4): DataFrame = {
+  def runIntervalJoinStream(spark: SparkSession, sfDir: String): DataFrame = {
     def side(eventType: String) = eventSource(spark, sfDir)
       .filter(col("event_type") === eventType)
       .withWatermark("ts", "1 hour")
@@ -166,24 +159,14 @@ object EventStream {
       col("user_id").as("v_user"), col("ts").as("view_ts"))
     val purchases = side("purchase").select(
       col("user_id").as("p_user"), col("ts").as("purchase_ts"), col("value"))
-    val name = "graft_stream_interval_join"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val q =
-      try views.join(purchases,
+    val drained = drainToMemory(spark, "graft_stream_interval_join", "append") {
+      views.join(purchases,
           col("v_user") === col("p_user") &&
             col("purchase_ts") >= col("view_ts") &&
             col("purchase_ts") <= col("view_ts") + expr("interval 10 minutes"))
         .select(col("p_user").as("user_id"), col("purchase_ts"), col("value"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
+    }
+    drained
       .groupBy(date_format(col("purchase_ts"), "yyyy-MM-dd").as("day"))
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct(col("user_id")).as("n_users"),
@@ -208,8 +191,7 @@ object EventStream {
     * (the conversion-gap number an attribution pipeline reports), and
     * matched value — equal to the batch LEFT JOIN, which is the oracle.
     */
-  def runIntervalLeftJoinStream(spark: SparkSession, sfDir: String,
-                                statePartitions: Int = 4): DataFrame = {
+  def runIntervalLeftJoinStream(spark: SparkSession, sfDir: String): DataFrame = {
     val (staged, schema) = stagedEventsWithSentinel(spark, sfDir)
     val base = graft.sources.TpchGraph.normalizeTs(
       spark.readStream.schema(schema)
@@ -221,24 +203,14 @@ object EventStream {
     val purchases = base.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
         col("value"))
-    val name = "graft_stream_interval_left_join"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val q =
-      try views.join(purchases,
+    val drained = drainToMemory(spark, "graft_stream_interval_left_join", "append") {
+      views.join(purchases,
           col("v_user") === col("p_user") &&
             col("purchase_ts") >= col("view_ts") &&
             col("purchase_ts") <= col("view_ts") + expr("interval 10 minutes"),
           "left_outer")
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
+    }
+    drained
       .filter(col("v_user") >= 0) // drop the sentinel's own row
       .groupBy(date_format(col("view_ts"), "yyyy-MM-dd").as("day"))
       .agg(count(lit(1)).as("n_rows"),
@@ -260,31 +232,20 @@ object EventStream {
     * state). This is how a 100 TB/day event feed picks up dimensions:
     * broadcast the dim, never shuffle the stream.
     */
-  def runStreamStaticJoin(spark: SparkSession, sfDir: String,
-                          statePartitions: Int = 4): DataFrame = {
+  def runStreamStaticJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = eventSource(spark, sfDir)
       .filter(col("event_type") === "purchase")
     val dim = spark.read.parquet(s"$sfDir/customer.parquet")
       .join(spark.read.parquet(s"$sfDir/nation.parquet"),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val name = "graft_stream_static_join"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val q =
-      try stream.join(broadcast(dim), col("user_id") === col("c_custkey"))
+    val drained = drainToMemory(spark, "graft_stream_static_join", "complete") {
+      stream.join(broadcast(dim), col("user_id") === col("c_custkey"))
         .groupBy("n_name")
         .agg(count(lit(1)).as("n_purchases"),
           sum(round(col("value") * 1000).cast("long")).as("sum_value_milli"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy("n_name")
+    }
+    drained.orderBy("n_name")
   }
 
   /** Sessionization with Spark's NATIVE `session_window` — the built-in
@@ -300,29 +261,18 @@ object EventStream {
     * comes on a bounded source), so the drained table is the full
     * session set and must equal the batch answer row for row.
     */
-  def runSessionWindowStream(spark: SparkSession, sfDir: String,
-                             statePartitions: Int = 4): DataFrame = {
+  def runSessionWindowStream(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = eventSource(spark, sfDir)
       .withColumn("ts", date_trunc("second", col("ts")))
-    val name = "graft_stream_sessions"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val q =
-      try stream
+    val drained = drainToMemory(spark, "graft_stream_sessions", "complete") {
+      stream
         .groupBy(col("user_id"), session_window(col("ts"), "1801 seconds").as("w"))
         .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
         .select(col("user_id"),
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
           col("n_events"), col("sum_value"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy("user_id", "session_start")
+    }
+    drained.orderBy("user_id", "session_start")
   }
 
   // ------------------------------------------------------- sessionization
@@ -608,7 +558,6 @@ object EventStream {
 
   def runSessionTimeoutStream(spark: SparkSession, sfDir: String,
                               gapMinutes: Int = 30,
-                              statePartitions: Int = 4,
                               shardMinutes: Int = 1440): DataFrame = {
     val (staged, schema) = stagedEventsWithSentinel(spark, sfDir)
     val locals = sessionShardTimeoutPipeline(spark,
@@ -618,19 +567,10 @@ object EventStream {
           .parquet(staged.getAbsolutePath)),
       gapMinutes, shardMinutes)
 
-    val name = "graft_stream_session_timeout"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val q =
-      try locals.filter(col("user_id") =!= -1L).writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.processAllAvailable()
-    finally q.stop()
-    val local = spark.table(name)
+    val drained = drainToMemory(spark, "graft_stream_session_timeout", "append") {
+      locals.filter(col("user_id") =!= -1L)
+    }
+    val local = drained
       .select(col("user_id"),
         timestamp_micros(col("startMicros")).as("start_ts"),
         timestamp_micros(col("lastMicros")).as("last_ts"),

@@ -45,7 +45,6 @@ object RestartRecovery {
     * maps, shuffle files all die with the executor and must not matter).
     */
   def run(spark: SparkSession, sfDir: String, interrupt: Boolean,
-          statePartitions: Int = 4,
           betweenIncarnations: () => Unit = () => ())
          (build: DataFrame => DataFrame): DataFrame = {
     val (staged, schema) = EventStream.stagedEventsWithSentinel(spark, sfDir)
@@ -68,15 +67,15 @@ object RestartRecovery {
         spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.getAbsolutePath))
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      try build(source).writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      graft.core.Conf.scoped(spark)(
+          "spark.sql.shuffle.partitions" -> EventStream.StatePartitions.toString) {
+        build(source).writeStream
+          .outputMode("append")
+          .format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", ckpt)
+          .start()
+      }
     }
 
     stage("00_events.parquet", t0)

@@ -35,8 +35,8 @@ object Triangles {
     * (orderkey, linenumber) rows shadow ~half the raw distinct pairs)
     * — a threshold calibrated in raw units against engine-unit masses
     * silently picks merged at the very point split was measured to
-    * win. Measured points in ENGINE units (TriPathBench, fresh session
-    * per rep, idle rig, r13): merged wins at 5.4M rows (g65 7.1 vs
+    * win. Measured points in ENGINE units (SCALE.md r13 crossover row,
+    * fresh session per rep, idle rig): merged wins at 5.4M rows (g65 7.1 vs
     * 10.8 s — its one checkpoint of the merged adjacency amortizes
     * across the degree pass and both probe joins); split wins at 21.4M
     * rows (47.0 vs 55.2 s — the full-adjacency checkpoint write

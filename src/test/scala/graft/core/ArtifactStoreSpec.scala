@@ -62,6 +62,24 @@ class ArtifactStoreSpec extends SparkSpec {
     assert(adj.count() > 0)
   }
 
+  test("ranked adjacency is exactly the mirrored co-purchase half edge set, recomputed from the fact table") {
+    // artifact-fed session memos make artifact CONTENT the correctness
+    // root for the whole co-purchase family: a wrong artifact would
+    // propagate everywhere the memos reach
+    import graft.sources.TpchGraph
+    val li = TpchGraph.lineitemDeduped(spark, sf)
+      .select(col("l_orderkey").as("k"), col("l_partkey").as("p")).distinct()
+    val nHalf = li.join(li.withColumnsRenamed(Map("p" -> "p2")), "k")
+      .filter(col("p") < col("p2"))
+      .select(col("p").as("u"), col("p2").as("v")).distinct().count()
+    assert(nHalf > 0)
+    val adj = TpchGraph.storedRankedAdjacency(spark, sf)
+    assert(adj.count() == 2 * nHalf)
+    assert(adj.select("u", "v").distinct().count() == 2 * nHalf)
+    assert(TpchGraph.copurchaseEdges(spark, sf).count() == nHalf)
+    assert(TpchGraph.copurchaseEdgesMirrored(spark, sf).count() == 2 * nHalf)
+  }
+
   test("a truncated/corrupt meta file triggers a clean rebuild, not a bad read") {
     val name = s"spec_art_corrupt_${System.nanoTime()}"
     ArtifactStore.bucketed(spark, name, "fp", "k", 2)(Seq((1L, 2L)).toDF("k", "v"))

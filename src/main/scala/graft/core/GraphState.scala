@@ -15,6 +15,13 @@ import org.apache.spark.sql.functions._
   * bulk mutations are unions + dedup that Catalyst plans as hash
   * aggregations; cascade deletes are two anti-joins. Persisted layout
   * partitions by `nodeType` ([[GraphIO]]) so type-filtered scans prune files.
+  *
+  * Cached inputs must be plan leaves. Mutations are unions, and
+  * `union`/`unionByName` flatten nested unions when the plan is built: a
+  * persisted Union under a mutation has its branches spliced into the
+  * new Union, the cache lookup misses, and every later read re-derives
+  * it from its sources. Pass persisted inputs through
+  * `CatalystBridge.cachedLeaf`, as `TpchGraph.cachedGraph` does.
   */
 final case class GraphState(nodes: Dataset[NodeRow], edges: Dataset[EdgeRow]) {
   import GraphState._

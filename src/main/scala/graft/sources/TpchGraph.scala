@@ -4,6 +4,7 @@ import graft.core.GraphState
 import graft.model.{EdgeRow, NodeRow}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
 
 /** Derives a typed property graph from the driver's synthetic star schema,
   * exercising the same graph shapes as the reference:
@@ -216,7 +217,11 @@ object TpchGraph {
     GraphState(nodes(spark, dir, encodeParallelism = encodeParallelism),
       edges(spark, dir))
 
-  private val cache = scala.collection.concurrent.TrieMap[String, GraphState]()
+  /** A [[cachedGraph]] entry: the leaf graph callers get, and the
+    * persisted Datasets that own its cache entries. */
+  private final case class CachedGraph(graph: GraphState, persisted: Seq[Dataset[_]])
+
+  private val cache = scala.collection.concurrent.TrieMap[String, CachedGraph]()
 
   private val copurchaseCache =
     scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.DataFrame]()
@@ -364,15 +369,23 @@ object TpchGraph {
     * every subsequent operator starts from the materialized nodes/edges —
     * the local analogue of a long-running engine keeping its base tables
     * hot. MEMORY_AND_DISK so an over-sized graph spills instead of OOMing.
+    *
+    * The returned nodes and edges are plan LEAVES over the cache entries
+    * ([[org.apache.spark.sql.graft.CatalystBridge.cachedLeaf]]), not the
+    * persisted Datasets: `union`/`unionByName` flatten nested unions when
+    * the plan is built, so a caller's union with the persisted 7-branch
+    * unions would splice their branches into its own and miss the cache,
+    * re-reading six parquet tables per query. The same (session, dir)
+    * always gets the same instance, which `GraphAnalytics`' memo keys on.
     */
   def cachedGraph(spark: SparkSession, dir: String): GraphState = {
     // same session-validation contract as sessionCached: a GraphState
-    // built by a stopped session must not be handed to a new one
+    // built by another session must not be handed to this one. A leaf's
+    // unpersist finds no cache entry, so free the persisted originals.
     cache.get(dir) match {
-      case Some(g) if g.nodes.sparkSession eq spark => return g
-      case Some(g) =>
-        try { g.nodes.unpersist(); g.edges.unpersist() }
-        catch { case _: Throwable => () }
+      case Some(c) if c.graph.nodes.sparkSession eq spark => return c.graph
+      case Some(c) =>
+        c.persisted.foreach(ds => try ds.unpersist() catch { case _: Throwable => () })
         cache.remove(dir)
       case None => ()
     }
@@ -382,24 +395,23 @@ object TpchGraph {
       // three hyperedge fan-out branches — otherwise each union branch
       // re-runs the 600k-row dedup window (no cross-branch CSE in Catalyst)
       val li = lineitemDeduped(spark, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      val g = GraphState(
-        nodes(spark, dir, withPayload = false, li0 = Some(li)),
-        edges(spark, dir, withPayload = false, li0 = Some(li)))
-      val persisted = GraphState(
-        g.nodes.persist(StorageLevel.MEMORY_AND_DISK),
-        g.edges.persist(StorageLevel.MEMORY_AND_DISK))
+      val n = nodes(spark, dir, withPayload = false, li0 = Some(li)).persist(StorageLevel.MEMORY_AND_DISK)
+      val e = edges(spark, dir, withPayload = false, li0 = Some(li)).persist(StorageLevel.MEMORY_AND_DISK)
+      val g = GraphState(CatalystBridge.cachedLeaf(n), CatalystBridge.cachedLeaf(e))
       // warm the edge cache off-thread: the first caller is usually a
       // node-side query, so the edge build overlaps it on idle cores
       // instead of serializing in front of the first traversal. Block
       // locks make a concurrent first use safe (it waits per partition);
       // failures surface on first real use.
       val prefetch = new Thread(() =>
-        try persisted.edges.count() catch { case _: Throwable => () })
+        try g.edges.count() catch { case _: Throwable => () })
       prefetch.setName("graft-edge-prefetch")
       prefetch.setDaemon(true)
       prefetch.start()
-      persisted
-    })
+      // unpersist order, dependents first: uncaching `li` while `n`/`e`
+      // are still cached would make the CacheManager re-plan them
+      CachedGraph(g, Seq(n, e, li))
+    }).graph
   }
 
   private val copurchaseTriCache =

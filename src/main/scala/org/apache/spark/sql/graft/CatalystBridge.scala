@@ -22,6 +22,23 @@ object CatalystBridge {
   def logicalPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
+  /** `ds` re-rooted on its cache-substituted plan: after `ds.persist()`
+    * that plan IS the `InMemoryRelation`, so the result is a plan leaf.
+    *
+    * Why: `union`/`unionByName` apply `CombineUnions` while BUILDING the
+    * plan, splicing a persisted Union's branches into the new Union. The
+    * CacheManager then finds no subtree equal to the cached plan, and
+    * every query over the union re-runs the whole derivation from its
+    * sources. A leaf cannot be spliced, so filters, unions and joins on
+    * top of it keep an `InMemoryTableScan` with its column and batch
+    * pruning and its size statistics. The leaf shares the cache entry's
+    * buffers but not its identity: `unpersist` must go through `ds`.
+    */
+  def cachedLeaf[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] =
+    org.apache.spark.sql.classic.Dataset(
+      ds.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      ds.queryExecution.withCachedData)(ds.encoder)
+
   /** Free the persisted RDDs behind a `localCheckpoint()`ed DataFrame
     * (including checkpoints under projections/filters) —
     * `Dataset.unpersist` only covers CacheManager entries, so iterative

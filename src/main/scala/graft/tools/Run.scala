@@ -1,6 +1,9 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 
 /** Dev run harness: time registered queries or dump their plans in ONE
   * session built the way [[graft.Bench]] builds its own (`Masters`,
@@ -23,7 +26,7 @@ import org.apache.spark.sql.SparkSession
   * when given, each query's dump is written there instead of stdout.
   * Query names resolve by [[resolve]].
   */
-object Run {
+object Run extends AdaptiveSparkPlanHelper {
   private val usage =
     "usage: Run time <q1,q2,...> [reps] | Run plan <q1,q2,...> [outTemplate]"
 
@@ -102,8 +105,9 @@ object Run {
     // execute THIS dataframe's own plan — df.count() builds a separate
     // aggregate plan and would leave this one un-finalized
     val n = df.collect().length
-    val p = df.queryExecution.executedPlan.toString
-    val (reused, exchanges) = exchangeCounts(p)
+    val executed = df.queryExecution.executedPlan
+    val p = executed.toString
+    val (reused, exchanges) = exchangeCounts(executed)
     val summary = s"[plandump] $name rows=$n ReusedExchange=$reused Exchange=$exchanges " +
       s"isFinalPlan=${p.contains("isFinalPlan=true")}"
     outTemplate match {
@@ -121,10 +125,14 @@ object Run {
     summary
   }
 
-  /** (ReusedExchange, Exchange) counts of a plan string. Exchange counts
-    * every non-reused exchange, hash or not; the lookbehind keeps it from
-    * also matching inside ReusedExchange.
+  /** (ReusedExchange, Exchange) node counts of an executed plan, AQE
+    * stages and subqueries included. Exchange counts every non-reused
+    * exchange, shuffle or broadcast. Counted on the tree, not the plan
+    * text: the text also prints each cached relation's build plan under
+    * its `InMemoryRelation` and AQE's initial plan next to the final one,
+    * neither of which this query executes.
     */
-  def exchangeCounts(plan: String): (Int, Int) =
-    ("ReusedExchange".r.findAllIn(plan).length, "(?<!Reused)Exchange".r.findAllIn(plan).length)
+  def exchangeCounts(plan: SparkPlan): (Int, Int) =
+    (collectWithSubqueries(plan) { case r: ReusedExchangeExec => r }.size,
+     collectWithSubqueries(plan) { case e: Exchange => e }.size)
 }

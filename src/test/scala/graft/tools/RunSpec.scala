@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class RunSpec extends SparkSpec {
@@ -41,10 +42,31 @@ class RunSpec extends SparkSpec {
     val agg = spark.range(1000).groupBy((col("id") % 10).as("k")).agg(count(lit(1)).as("c"))
     val df = agg.join(agg.withColumnRenamed("c", "c2"), "k")
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
+    val p = df.queryExecution.executedPlan
     val (reused, exchanges) = Run.exchangeCounts(p)
     assert(reused >= 1 && exchanges >= 1, p)
-    // every "Exchange" occurrence lands in exactly one of the two counts
-    assert(reused + exchanges == "Exchange".r.findAllIn(p).length, p)
+  }
+
+  test("a query over a persisted input reports the same exchange counts as its unpersisted twin") {
+    // the input's own build plan shuffles; the twin holds the same rows
+    // in a local relation, so both queries execute the same operators
+    val input = spark.range(1000).groupBy((col("id") % 100).as("k")).agg(count(lit(1)).as("c"))
+    def query(in: DataFrame): DataFrame =
+      in.groupBy((col("k") % 7).as("g")).agg(sum("c").as("s"))
+        .groupBy((col("g") % 2).as("h")).agg(sum("s").as("s"))
+    def executed(df: DataFrame) = { df.collect(); df.queryExecution.executedPlan }
+    val twin = executed(query(spark.createDataFrame(
+      java.util.Arrays.asList(input.collect(): _*), input.schema)))
+    val persisted = input.persist()
+    try {
+      persisted.count()
+      val hit = executed(query(persisted))
+      // the plan text prints the cached relation's build plan, exchange included
+      assert(hit.toString.contains("InMemoryRelation"), hit)
+      assert("Exchange".r.findAllIn(hit.toString).length >
+        "Exchange".r.findAllIn(twin.toString).length, hit)
+      assert(Run.exchangeCounts(hit) == Run.exchangeCounts(twin), s"$hit\n$twin")
+      assert(Run.exchangeCounts(twin)._2 >= 2, twin)
+    } finally persisted.unpersist()
   }
 }

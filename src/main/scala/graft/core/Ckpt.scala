@@ -1,31 +1,35 @@
 package graft.core
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.graft.CatalystBridge
 import org.apache.spark.storage.StorageLevel
 
-/** Deployment-aware lineage cutting.
+/** The one way engine code cuts lineage.
   *
   * The iterative plans (PageRank, HITS, k-core, SCC, BFS, the triangle
-  * family, CC merge loops…) cut lineage every round with
-  * `localCheckpoint` — the right call for iteration (no reliable-FS
-  * round trip), but its blocks live ONLY on the executors that computed
-  * them and the lineage is truncated, so on a multi-executor master a
-  * single executor death strands every in-flight consumer:
-  * `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`, job dead, no retry possible.
-  * Measured, not hypothetical — the r13 executor-kill stress reproduced
-  * exactly that on g52 (HITS) under `local-cluster[2,4,2048]`.
+  * family, CC merge loops…) cut lineage every round, and the corpus
+  * pipelines cut it where a derived table feeds several consumers.
+  * `lckpt` is that cut, in one form:
   *
-  * `lckpt` is the drop-in replacement every engine call site uses: on a
-  * single-JVM master (`local[N]` — the bench rig) it is byte-identical
-  * to `localCheckpoint`'s default `MEMORY_AND_DISK`, so committed
-  * numbers don't move; on any multi-executor master (`local-cluster`,
-  * `spark://`, `yarn`, `k8s`) it persists the checkpoint blocks at
-  * `MEMORY_AND_DISK_2` — one replica on a second executor — so losing
-  * any single executor leaves every checkpoint partition readable and
-  * the query completes through ordinary task retry. Replica cost is
-  * paid only where the failure mode exists; a 1000-executor deployment
-  * runs hot enough executor churn that unreplicated local checkpoints
-  * are simply wrong there.
+  *  - It runs the plan now, with AQE on as the session has it, and
+  *    persists the rows at [[level]] behind a `LogicalRDD` leaf.
+  *  - The leaf keeps the partitioning and ordering the rows were stored
+  *    in, read from the adaptive plan's final form
+  *    ([[org.apache.spark.sql.graft.CatalystBridge.partitionKeepingCheckpoint]]).
+  *    A loop-static table shaped once with [[IterPlan]]'s `keyed` is
+  *    therefore joined every round without an Exchange on its side, and
+  *    an aggregate's result keeps its (possibly coalesced) hash
+  *    partitioning.
+  *  - Nothing is deferred: when `lckpt` returns, the blocks exist and
+  *    the job that wrote them has finished.
+  *
+  * The storage level is deployment-aware. `localCheckpoint` blocks live
+  * only on the executors that computed them and the lineage is gone, so
+  * on a multi-executor master one executor death strands every consumer
+  * (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`; the r13 executor-kill stress
+  * reproduced it on g52 (HITS) under `local-cluster[2,4,2048]`). Cluster
+  * masters therefore store a replica; a single-JVM master (`local[N]`,
+  * the bench rig) keeps `localCheckpoint`'s default level.
   */
 object Ckpt {
 
@@ -77,8 +81,8 @@ object Ckpt {
     else StorageLevel.DISK_ONLY_2
 
   implicit class DatasetCkptOps[T](private val ds: Dataset[T]) extends AnyVal {
-    /** `localCheckpoint` with the deployment-resolved storage level. */
-    def lckpt(eager: Boolean = true): Dataset[T] =
-      ds.localCheckpoint(eager, level(ds))
+    /** Run `ds` now and cut its lineage at [[level]], keeping the final
+      * plan's partitioning and ordering on the leaf. */
+    def lckpt(): Dataset[T] = CatalystBridge.partitionKeepingCheckpoint(ds, level(ds))
   }
 }

@@ -239,16 +239,16 @@ object Corpus {
     import spark.implicits._
     val words = df.select(explode(TextOps.tokens(lower(text))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-      .lckpt(eager = false)
+      .lckpt()
     var sym = words.select(col("word"), col("freq"),
         posexplode(expr("transform(sequence(1, length(word)), j -> substring(word, j, 1))"))
           .as(Seq("pos", "s")))
-      .lckpt(eager = false)
+      .lckpt()
     val byPos = Window.partitionBy("word").orderBy("pos")
     val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long, Long)]()
     for (r <- 1 to rounds) {
       val pairs = sym.withColumn("s2", lead(col("s"), 1).over(byPos))
-        .lckpt(eager = false)
+        .lckpt()
       val topOpt = pairs.filter(col("s2").isNotNull)
         .groupBy("s", "s2").agg(sum(col("freq")).as("c"))
         .orderBy(col("c").desc, col("s"), col("s2")).limit(1)
@@ -271,7 +271,7 @@ object Corpus {
           Window.partitionBy("word", "island").orderBy("pos")))
         .filter(col("rn2") % 2 === 1)
         .select(col("word"), col("pos"))
-        .lckpt(eager = false)
+        .lckpt()
       sym = sym
         .join(sel.withColumn("selq", lit(1)), Seq("word", "pos"), "left")
         .join(sel.select(col("word"), (col("pos") + 1).as("pos"))
@@ -281,7 +281,7 @@ object Corpus {
           when(col("selq") === 1, lit(s1v + s2v)).otherwise(col("s")).as("s"))
         .withColumn("pos2", row_number().over(byPos) - 1)
         .select(col("word"), col("freq"), col("pos2").as("pos"), col("s"))
-        .lckpt(eager = false)
+        .lckpt()
       val nAfter = sym.agg(coalesce(sum(col("freq")), lit(0L))).head().getLong(0)
       out += ((r, s1v, s2v, cv, nAfter))
       }
@@ -581,7 +581,7 @@ object Corpus {
                    topN: Int): DataFrame = {
     require(minJoint >= 1 && topN >= 1, "collocations needs positive bounds")
     val staged = df.select(TextOps.tokens(lower(text)).as("ts"))
-      .lckpt(eager = false)
+      .lckpt()
     val uni = staged.select(explode(col("ts")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
     val nTotal = staged.select(coalesce(sum(size(col("ts"))), lit(0))

@@ -410,7 +410,7 @@ object Dedup {
     // relation (the p118 class) while the doc-array side streams
     // unsorted (the SMJ sort of the r15 merge pin was the premium the
     // re-floored family paid; guide §3.1).
-    val g = gramSets(df, id, text, n).lckpt(eager = false)
+    val g = gramSets(df, id, text, n).lckpt()
     val sigs = g.select(col("id"),
       graft.functions.expressions.MinHashSigs
         .minHashSigCol(transform(col("gs"), gr => gramHash(gr)), numHashes).as("signature"))
@@ -467,10 +467,10 @@ object Dedup {
     // computes the chunk scan once instead of twice (it feeds both the
     // shared-set derivation and the join's left side)
     val perHD = chunks.groupBy("h", "doc_id").agg(count(lit(1)).as("c"))
-      .lckpt(eager = false)
+      .lckpt()
     val sharedH = perHD.groupBy("h").agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= 2).select(col("h"), lit(1).as("sh"))
-      .lckpt(eager = false)
+      .lckpt()
     perHD.hint("merge").join(sharedH.hint("merge"), Seq("h"), "left")
       .groupBy("doc_id").agg(
         sum(col("c")).as("n_chunks"),
@@ -547,7 +547,7 @@ object Dedup {
     // DISTINCT duplicated gram — far below the occurrence table.
     val dupH = occ.groupBy("h").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 2).select("h")
-      .lckpt(eager = false)
+      .lckpt()
     val marked = occ.hint("merge")
       .join(dupH.hint("merge"), Seq("h"), "left_semi")
       .withColumn("brk",
@@ -600,7 +600,7 @@ object Dedup {
     // key is (route, band, bucket), so cross-route pairs are never
     // generated, exactly as before.
     val routed = df.select(id.as("id"), route.as("route"), text.as("t"))
-    val g = gramSets(routed, col("id"), col("t"), n, col("route")).lckpt(eager = false)
+    val g = gramSets(routed, col("id"), col("t"), n, col("route")).lckpt()
     val sigs = g.select(col("id"), col("route"),
       graft.functions.expressions.MinHashSigs
         .minHashSigCol(transform(col("gs"), gr => gramHash(gr)), numHashes).as("signature"))
@@ -951,9 +951,6 @@ object Dedup {
       ).as("simhash"))
   }
 
-  /** Hamming distance between two 64-bit signatures. */
-  def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   // ----------------------------------------------------------- SemDedup
 
   /** SemDedup-style semantic deduplication (Abbas et al. 2023, "SemDedup:
@@ -1128,7 +1125,7 @@ object Dedup {
     // sides — see duplicateSpans)
     val dupFp = fps.groupBy("fp").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select(col("fp"), lit(1).as("sh"))
-      .lckpt(eager = false)
+      .lckpt()
     fps.hint("merge").join(dupFp.hint("merge"), Seq("fp"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_fp"),

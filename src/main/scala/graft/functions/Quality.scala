@@ -218,7 +218,7 @@ object Quality {
 
   /** The κ readout over a `(label_a, label_b, n_docs)` cell table. */
   def raterVerdict(cells0: DataFrame): DataFrame = {
-    val cells = cells0.lckpt(eager = false)
+    val cells = cells0.lckpt()
     val rowTot = cells.groupBy(col("label_a").as("k")).agg(sum("n_docs").as("ra"))
     val colTot = cells.groupBy(col("label_b").as("k")).agg(sum("n_docs").as("rb"))
     val stats = cells

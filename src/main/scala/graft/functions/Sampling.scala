@@ -183,7 +183,7 @@ object Sampling {
     val reps = base.select(col("r"), w.as("w"), col("t"))
       .groupBy("r").agg(sum(col("w")).as("docs_eff"),
         sum(col("w") * col("t")).as("tokens_eff"))
-      .lckpt(eager = false)
+      .lckpt()
     val sse = reps.agg(
       expr(s"$k * sum(CAST(docs_eff AS DECIMAL(38,0)) * docs_eff)" +
         s" - CAST(sum(docs_eff) AS DECIMAL(38,0)) * sum(docs_eff)").as("ssd"),

@@ -306,7 +306,7 @@ object Sketch {
                               k: Int = 64): DataFrame = {
     require(k >= 2, s"minhashSimilarityMatrix needs k >= 2: $k")
     val hashes = df.select(group.as("grp"), Dedup.gramHash(value).as("h"))
-      .distinct().lckpt(eager = false)
+      .distinct().lckpt()
     val bottom = TopKPerGroup.topK(hashes, Seq(col("grp")), -col("h"), k)
     val groups = hashes.select("grp").distinct()
     val pairs = groups.select(col("grp").as("ga"))

@@ -125,9 +125,6 @@ object Fields {
   def latitudeOk(c: Column): Column = c.isNotNull && c >= -89.9 && c <= 89.9
   def longitudeOk(c: Column): Column = c.isNotNull && c >= -180.0 && c <= 180.0
   def shortTextOk(c: Column): Column = c.isNotNull && length(c) > 0 && length(c) <= 100
-  def doiOk(c: Column): Column = c.rlike(DoiRe.regex)
-  def depthOk(c: Column): Column = c.isNotNull && c >= 0.0
-  def percentOk(c: Column): Column = c.isNotNull && c >= 0.0 && c <= 1.0
 
   /** Partition a DataFrame into (valid, invalid-with-reason) under a set
     * of named column checks — the scale form of the reference's

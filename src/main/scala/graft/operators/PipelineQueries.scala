@@ -3169,7 +3169,7 @@ object PipelineQueries {
           .select((col("doc_id") % 3).cast("int").as("wave"),
             explode(TextOps.tokens(lower(col("text")))).as("t"))
           .groupBy("wave", "t").agg(count(lit(1)).as("c"))
-          .lckpt(eager = false)
+          .lckpt()
         val totals = counts.groupBy("wave").agg(sum(col("c")).as("n"))
           .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
         def drift(wa: Int, wb: Int) = {

@@ -134,7 +134,7 @@ object Curation {
         (graft.functions.Dedup.gramHash(concat(lit("shard:"), id.cast("string")))
           % shards).cast("int").as("shard"),
         deletePred.as("del"))
-      .lckpt(eager = false)
+      .lckpt()
     def row(name: String, before: Column, affected: Column, after: Column) =
       (df: DataFrame) => df.select(lit(name).as("artifact"),
         before.cast("long").as("n_before"),
@@ -189,7 +189,7 @@ object Curation {
       // integer `div`, not `/` — Spark's `/` on longs is true division
       .select(col("source"), col("doc_id"),
         expr("num div den").as("score_ppm"))
-      .lckpt(eager = false)
+      .lckpt()
     val byRankW = Window.partitionBy("source")
     def ranked(df: DataFrame, best: Boolean) = {
       val ord = if (best) Seq(col("score_ppm").desc, col("doc_id").asc)

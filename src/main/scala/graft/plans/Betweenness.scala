@@ -49,22 +49,21 @@ object Betweenness {
     * Σ_seeds δ́_s(node) at the given `scale`.
     */
   def sampled(edges: DataFrame, starts: DataFrame, maxDepth: Int,
-              scale: Long = 1000L): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+              scale: Long = 1000L): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(maxDepth >= 1, s"maxDepth must be positive: $maxDepth")
     require(scale >= 1, s"scale must be positive: $scale")
-    // keyed(u) + IterPlan capture: both the forward levels and the
+    // keyed(u) + checkpoint leaf: both the forward levels and the
     // backward dependency pass join the edge table on u — zero-exchange
     // on the edge side every level (merge-pinned; p118 class otherwise)
     val e = edges.select(col("u"), col("v")).distinct()
-      .keyed("u").lckpt(eager = false)
+      .keyed("u").lckpt()
 
     // forward: per-level (start, node, sigma); sigma(v) = Σ parent sigma
     var visited = starts.select(col("start"), col("start").as("node"))
-      .lckpt(eager = false)
+      .lckpt()
     var frontier = starts.select(col("start"), col("start").as("node"),
-      lit(1L).as("sigma")).lckpt(eager = false)
+      lit(1L).as("sigma")).lckpt()
     val levels = scala.collection.mutable.ArrayBuffer(frontier)
     var depth = 0
     while (depth < maxDepth && !frontier.isEmpty) {
@@ -73,9 +72,9 @@ object Betweenness {
         .select(col("start"), col("v").as("node"), col("sigma"))
         .join(visited, Seq("start", "node"), "left_anti")
         .groupBy("start", "node").agg(sum(col("sigma")).as("sigma"))
-        .lckpt(eager = false)
+        .lckpt()
       visited = visited.unionByName(next.select("start", "node"))
-        .lckpt(eager = false)
+        .lckpt()
       frontier = next
       levels += frontier
     }
@@ -83,7 +82,7 @@ object Betweenness {
     // backward: deepest level's delta is 0; each level accumulates from
     // its shortest-path successors one level deeper
     var delta = levels.last.select(col("start"), col("node"), lit(0L).as("delta"))
-      .lckpt(eager = false)
+      .lckpt()
     var acc = delta
     for (d <- (levels.size - 2) to 0 by -1) {
       val cur = levels(d)
@@ -117,12 +116,12 @@ object Betweenness {
         .join(terms, Seq("start", "node"), "left")
         .select(col("start"), col("node"),
           coalesce(col("delta"), lit(0L)).as("delta"))
-        .lckpt(eager = false)
+        .lckpt()
       acc = acc.unionByName(delta)
     }
 
     acc.filter(col("node") =!= col("start"))
       .groupBy("node").agg(sum(col("delta")).as("betweenness_milli"))
       .filter(col("betweenness_milli") > 0)
-   }
+  }
 }

@@ -222,7 +222,7 @@ object GraphAnalytics {
         greatest(col("u"), col("v")).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
       .distinct()
-      .lckpt(eager = false)
+      .lckpt()
     val nAll = undAll.count()
     val und =
       if (nAll <= maxEdges) undAll
@@ -231,7 +231,7 @@ object GraphAnalytics {
         def keep(c: org.apache.spark.sql.Column) =
           graft.functions.Sampling.hash01(c, "graphx-tri:") < f
         undAll.filter(keep(col("u")) && keep(col("v")))
-          .lckpt(eager = false)
+          .lckpt()
       }
     // Partition count scales with EDGE MASS, not cores: TriangleCount's
     // per-task heap is the sum of neighbor-set sizes over the vertices

@@ -38,29 +38,28 @@ object Hits {
     * `(key, hub_scaled, auth_scaled)` for every vertex appearing as an
     * endpoint.
     */
-  def scaled(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+  def scaled(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(iters >= 1, s"iters must be positive: $iters")
     require(scale >= 1, s"scale must be positive: $scale")
     val e0 = edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-      .lckpt(eager = false)
+      .lckpt()
     // HITS consumes the edge set in BOTH orientations (a-half joins on
     // src, h-half on dst), so two keyed checkpoint copies — one Exchange
     // each at construction — make every per-round join zero-exchange/
-    // zero-sort off the captured partitioning (IterPlan); the r17 plan
+    // zero-sort off the checkpoint leaf's partitioning; the r17 plan
     // audit showed the single UnknownPartitioning leaf re-Exchanging per
     // half-round instead. Same both-orientations storage trade GraphX
     // makes (edge partitions are kept per routing direction).
-    val eSrc = e0.keyed("src").lckpt(eager = false)
-    val eDst = e0.keyed("dst").lckpt(eager = false)
+    val eSrc = e0.keyed("src").lckpt()
+    val eDst = e0.keyed("dst").lckpt()
     val vertices = e0.select(col("src").as("key"))
       .unionAll(e0.select(col("dst").as("key")))
       .distinct()
       .keyed("key")
-      .lckpt(eager = false)
+      .lckpt()
     var hubs = vertices.withColumn("h", lit(scale))
     var auths = vertices.withColumn("a", lit(0L))
     for (_ <- 1 to iters) {
@@ -82,7 +81,7 @@ object Hits {
       val aRaw = vertices.hint("merge")
         .join(araw, col("key") === col("dst"), "left")
         .select(col("key"), coalesce(col("raw"), lit(0L)).as("raw"))
-        .lckpt(eager = false)
+        .lckpt()
       auths = aRaw
         .crossJoin(broadcast(aRaw.agg(max(col("raw")).as("mx"))))
         .select(col("key"),
@@ -92,8 +91,8 @@ object Hits {
       val hRaw0 = vertices.hint("merge")
         .join(hraw, col("key") === col("src"), "left")
         .select(col("key"), coalesce(col("raw"), lit(0L)).as("raw"))
+      val hRaw = hRaw0.lckpt()
       graft.core.IterPlan.debugDump("hits h-half-round", hRaw0)
-      val hRaw = hRaw0.lckpt(eager = false)
       hubs = hRaw
         .crossJoin(broadcast(hRaw.agg(max(col("raw")).as("mx"))))
         .select(col("key"),
@@ -101,5 +100,5 @@ object Hits {
     }
     hubs.join(auths, "key")
       .select(col("key"), col("h").as("hub_scaled"), col("a").as("auth_scaled"))
-   }
+  }
 }

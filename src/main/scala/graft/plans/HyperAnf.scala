@@ -73,7 +73,7 @@ object HyperAnf {
     */
   private[graft] def roundMax(adjSelf: DataFrame, regs: DataFrame): DataFrame = {
     val regsY = regs.withColumnRenamed("x", "y")
-    // merge-pinned: adjSelf is keyed(y) + checkpoint-captured (IterPlan)
+    // merge-pinned: adjSelf is keyed(y) and its checkpoint leaf keeps that
     // and regs comes back hash(x)-partitioned from the round aggregate,
     // so the SMJ is zero-exchange (one regs-side sort, vertex-sized);
     // unpinned, the leaves' captured stats read broadcast-small at test
@@ -102,8 +102,7 @@ object HyperAnf {
     * identity rows the register max needs).
     */
   def trajectory(edges: DataFrame, maxRounds: Int,
-                 salt: String = "anf:"): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+                 salt: String = "anf:"): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
@@ -116,13 +115,13 @@ object HyperAnf {
     val adj = und.select(col("u").as("x"), col("v").as("y"))
       .unionAll(und.select(col("v").as("x"), col("u").as("y")))
     val vertices = adj.select(col("x")).distinct()
-    // keyed by the round join's key (IterPlan): every roundMax join is
-    // then zero-exchange off the captured partitioning — the union had
+    // keyed by the round join's key: every roundMax join is then
+    // zero-exchange off the checkpoint leaf's partitioning — the union had
     // no usable partitioning anyway, so this adds nothing over the
     // Exchange each round previously paid once
     val adjSelf = adj.unionAll(vertices.select(col("x"), col("x").as("y")))
       .keyed("y")
-      .lckpt(eager = false)
+      .lckpt()
 
     val regCols = (0 until M).map(j => col(s"rg$j"))
     val sumReg = regCols.map(_.cast("long")).reduceLeft(_ + _)
@@ -133,15 +132,15 @@ object HyperAnf {
       (r, row.getLong(0), row.getLong(1))
     }
 
-    var regs = initRegisters(vertices, salt).lckpt(eager = false)
+    var regs = initRegisters(vertices, salt).lckpt()
     val rows = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
     rows += statsRow(regs, 0)
     var r = 0
     while (r < maxRounds) {
       r += 1
       val next = roundMax(adjSelf, regs)
+      regs = next.lckpt()
       graft.core.IterPlan.debugDump(s"hyperanf round $r", next)
-      regs = next.lckpt(eager = false)
       rows += statsRow(regs, r)
     }
     rows.toSeq.toDF("round", "sum_registers", "nf_micro")

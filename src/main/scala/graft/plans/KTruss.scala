@@ -36,8 +36,7 @@ object KTruss {
     * wedge enumeration; the peel's per-round semi-joins are unchanged.
     */
   def peelSummary(edges: DataFrame, k: Int, maxRounds: Int,
-                  tri0: Option[DataFrame] = None): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+                  tri0: Option[DataFrame] = None): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(k >= 3, s"k-truss needs k >= 3: $k")
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
@@ -45,15 +44,15 @@ object KTruss {
     import spark.implicits._
     val minSup = (k - 2).toLong
 
-    // keyed (u, v) once (IterPlan): the per-round support join and each
+    // keyed (u, v) once: the per-round support join and each
     // round's three alias-keyed edge-filter probes then run with a
-    // zero-exchange edge side off the captured partitioning — the edge
+    // zero-exchange edge side off the checkpoint leaf's partitioning — the edge
     // set is the corpus-scale table here, and the r17 audit showed the
     // UnknownPartitioning checkpoint leaf re-Exchanging it per round
     var e = edges
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct().keyed("u", "v").lckpt(eager = false)
+      .distinct().keyed("u", "v").lckpt()
 
     // triangle list as its three canonical edges, flat long columns —
     // from the standing artifact when provided (corners are id-sorted,
@@ -65,7 +64,7 @@ object KTruss {
             col("x1").as("u2"), col("x3").as("v2"),
             col("x2").as("u3"), col("x3").as("v3"))
           .keyed("u1", "v1")
-          .lckpt(eager = false)
+          .lckpt()
       case None =>
         val deg = e.select(col("u").as("x"))
           .unionAll(e.select(col("v").as("x")))
@@ -78,7 +77,7 @@ object KTruss {
           when(uFirst, col("u")).otherwise(col("v")).as("sid"),
           when(uFirst, col("v")).otherwise(col("u")).as("tid"),
           when(uFirst, col("dv")).otherwise(col("du")).as("td"))
-          .lckpt(eager = false)
+          .lckpt()
         val e1 = oriented.select(col("sid").as("a"), col("tid").as("b"), col("td").as("bd"))
         val e2 = oriented.select(col("sid").as("a2"), col("tid").as("c"), col("td").as("cd"))
         val wedges = e1.join(e2, col("a") === col("a2") &&
@@ -91,7 +90,7 @@ object KTruss {
             least(col("a"), col("wc")).as("u2"), greatest(col("a"), col("wc")).as("v2"),
             least(col("wb"), col("wc")).as("u3"), greatest(col("wb"), col("wc")).as("v3"))
           .keyed("u1", "v1")
-          .lckpt(eager = false)
+          .lckpt()
     }
 
     def supports(t: DataFrame): DataFrame =
@@ -132,14 +131,14 @@ object KTruss {
         // unpinned plan would re-broadcast a corpus-scale side per round
         val kept0 = e.hint("merge").join(supports(tri), Seq("u", "v"))
           .filter(col("sup") >= minSup)
+        val kept = kept0.lckpt()
         graft.core.IterPlan.debugDump(s"ktruss support round $round", kept0)
-        val kept = kept0.lckpt(eager = false)
         val summary = kept.agg(
           count(lit(1)).as("n"), coalesce(sum("sup"), lit(0L)).as("s")).head()
         rows += ((round, summary.getLong(0), summary.getLong(1)))
         converged = summary.getLong(0) == before
         before = summary.getLong(0)
-        e = kept.select("u", "v").lckpt(eager = false)
+        e = kept.select("u", "v").lckpt()
         if (!converged) {
           // triangles only die: filter the list to surviving edges.
           // The e side is zero-exchange in ALL THREE probes (alias-aware
@@ -151,10 +150,10 @@ object KTruss {
             .join(e.select(col("u").as("u2"), col("v").as("v2")), Seq("u2", "v2"))
             .hint("merge")
             .join(e.select(col("u").as("u3"), col("v").as("v3")), Seq("u3", "v3"))
-            .lckpt(eager = false)
+            .lckpt()
         }
       }
     }
     rows.toSeq.toDF("round", "n_edges", "sum_support")
-   }
+  }
 }

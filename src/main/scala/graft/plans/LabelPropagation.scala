@@ -27,21 +27,20 @@ object LabelPropagation {
     * `v`, any orderable type); every endpoint starts labeled with
     * itself. Returns `(key, label)` for every vertex.
     */
-  def run(edges: DataFrame, iters: Int): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+  def run(edges: DataFrame, iters: Int): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(iters >= 0, s"iters must be >= 0: $iters")
     val nbrs = edges.select(col("u"), col("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct()
-    // keyed(v) + IterPlan capture: the per-round neighbor-label join is
+    // keyed(v) + checkpoint leaf: the per-round neighbor-label join is
     // zero-exchange on the (corpus-scale) edge side; merge-pinned since
     // the checkpoint leaves' captured stats read broadcast-small at test
     // SF (the p118 class at a lake)
     val und = nbrs.unionByName(nbrs.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .keyed("v")
-      .lckpt(eager = false)
+      .lckpt()
     val byCount = Window.partitionBy("key").orderBy(desc("n"), asc("label"))
     var labels = und.select(col("u").as("key")).distinct()
       .withColumn("label", col("key"))
@@ -49,7 +48,8 @@ object LabelPropagation {
       // cut lineage on the INPUT of each round (not the output): earlier
       // rounds collapse to a materialized RDD while the last round's
       // join/aggregate/window stays a visible, optimizable plan
-      val prev = if (i == 1) labels else labels.lckpt(eager = false)
+      val prev = if (i == 1) labels else labels.lckpt()
+      if (i > 1) graft.core.IterPlan.debugDump(s"lpa round ${i - 1}", labels)
       labels = und.hint("merge")
         .join(prev.withColumnRenamed("key", "v"), "v")
         .select(col("u").as("key"), col("label"))
@@ -59,5 +59,5 @@ object LabelPropagation {
         .select(col("key"), col("label"))
     }
     labels
-   }
+  }
 }

@@ -121,12 +121,11 @@ object Matching {
           md5(concat(lit(salt), col("u").cast("string"), lit(":"),
             col("v").cast("string")))).as("pe"))
       .keyed("u")
-      .lckpt(eager = false)
+      .lckpt()
   }
 
   def weightedTrajectory(edges: DataFrame, maxRounds: Int,
-                         salt: String = "hmatch:"): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+                         salt: String = "hmatch:"): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
@@ -142,8 +141,8 @@ object Matching {
         rows += ((round, 0L, 0L, 0L))
       } else {
         val sel0 = roundSelectW(e)
+        val sel = sel0.lckpt()
         graft.core.IterPlan.debugDump(s"wmatch select round $round", sel0)
-        val sel = sel0.lckpt(eager = false)
         val matchedV = sel.select(col("u").as("x"))
           .unionAll(sel.select(col("v").as("x"))).distinct()
         // u probe merge-pinned (zero-exchange: e keyed u, matchedV comes
@@ -155,8 +154,8 @@ object Matching {
           .join(matchedV.select(col("x").as("u")), Seq("u"), "left_anti")
           .join(matchedV.select(col("x").as("v")), Seq("v"), "left_anti")
           .select("u", "v", "w", "pe")
+        val eNext = eNext0.lckpt()
         graft.core.IterPlan.debugDump(s"wmatch residual round $round", eNext0)
-        val eNext = eNext0.lckpt(eager = false)
         val selAgg = sel.agg(count(lit(1)).as("n"),
           coalesce(sum(col("w")), lit(0L)).as("mw")).head()
         val nRem = eNext.count()
@@ -166,7 +165,7 @@ object Matching {
       }
     }
     rows.toSeq.toDF("round", "n_matched", "matched_weight", "n_remaining")
-   }
+  }
 
   /** One multilevel COARSENING level (the step [[weightedTrajectory]]'s
     * matching exists for): contract each heavy-matched pair into a
@@ -202,10 +201,9 @@ object Matching {
                                 coarse: DataFrame)
 
   def coarsenLevel(edges: DataFrame, salt: String = "hmatch:",
-                   op: String = "coarsenLevel"): CoarsenLevel =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+                   op: String = "coarsenLevel"): CoarsenLevel = {
     val e = prepWeighted(edges, salt, op)
-    val sel = roundSelectW(e).lckpt(eager = false)
+    val sel = roundSelectW(e).lckpt()
     val verts = e.select(col("u").as("x"))
       .unionAll(e.select(col("v").as("x"))).distinct()
     // contraction map: both endpoints of a matched pair → the smaller id
@@ -213,7 +211,7 @@ object Matching {
       .unionAll(sel.select(col("v").as("x"), col("u").as("sx")))
     val superOf = verts.join(cmap, Seq("x"), "left")
       .select(col("x"), coalesce(col("sx"), col("x")).as("sx"))
-      .lckpt(eager = false)
+      .lckpt()
     // u probe zero-exchange off prepWeighted's keyed(u) and merge-pinned;
     // the v probe is stats-chosen (e is not v-partitioned — a pin would
     // force the full-edge Exchange+sort a broadcast avoids at test SF,
@@ -221,14 +219,14 @@ object Matching {
     val rek = e.hint("merge")
       .join(superOf.select(col("x").as("u"), col("sx").as("su")), "u")
       .join(superOf.select(col("x").as("v"), col("sx").as("sv")), "v")
-      .lckpt(eager = false)
+      .lckpt()
     val coarse = rek.filter(col("su") =!= col("sv"))
       .groupBy(least(col("su"), col("sv")).as("cu"),
         greatest(col("su"), col("sv")).as("cv"))
       .agg(sum(col("w")).as("w"))
-      .lckpt(eager = false)
+      .lckpt()
     CoarsenLevel(e, sel, superOf, rek, coarse)
-   }
+  }
 
   /** The g67 stats row off a [[CoarsenLevel]]. `collapsed_weight` is
     * measured from the re-keyed edges (NOT derived as before − after),
@@ -313,7 +311,7 @@ object Matching {
       .orderBy(col("bw").desc, col("sx"))
     val assign = vw.select(col("sx"), col("bw"),
         (((row_number().over(rankWin) - 1) % k).cast("long")).as("pid"))
-      .lckpt(eager = false)
+      .lckpt()
     (coarse, assign)
   }
 
@@ -423,7 +421,7 @@ object Matching {
     val conn = inc
       .join(assign.select(col("sx").as("nbr"), col("pid").as("q")), "nbr")
       .groupBy("x", "q").agg(sum(col("w")).as("cw"))
-      .lckpt(eager = false)
+      .lckpt()
     val bestWin = org.apache.spark.sql.expressions.Window
       .partitionBy("x").orderBy(col("cw").desc, col("q"))
     val best = conn.withColumn("rn", row_number().over(bestWin))
@@ -437,7 +435,7 @@ object Matching {
         (col("bw2") - col("curw")).as("gain"),
         (conv(substring(md5(concat(lit(paritySalt), col("sx").cast("string"))),
           1, 7), 16, 10).cast("long") % 2).as("par"))
-      .lckpt(eager = false)
+      .lckpt()
     val asg2 = mv.select(col("sx"),
       when(col("gain") > 0 && col("par") === 0L && col("target") =!= col("pid"),
         col("target")).otherwise(col("pid")).as("pid"))
@@ -477,8 +475,7 @@ object Matching {
     * self-loops dropped — a self-loop can never be matched).
     */
   def trajectory(edges: DataFrame, maxRounds: Int,
-                 salt: String = "match:"): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+                 salt: String = "match:"): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
@@ -492,7 +489,7 @@ object Matching {
         md5(concat(lit(salt), col("u").cast("string"), lit(":"),
           col("v").cast("string"))).as("pe"))
       .keyed("u")
-      .lckpt(eager = false)
+      .lckpt()
 
     val rows = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
     var remaining = e.count()
@@ -502,7 +499,7 @@ object Matching {
       if (remaining == 0L) {
         rows += ((round, 0L, 0L)) // fixpoint — matches the oracle's no-op unroll
       } else {
-        val sel = roundSelect(e).lckpt(eager = false)
+        val sel = roundSelect(e).lckpt()
         val matchedV = sel.select(col("u").as("x"))
           .unionAll(sel.select(col("v").as("x"))).distinct()
         // u probe pinned, v probe stats-chosen (see weightedTrajectory's
@@ -516,7 +513,7 @@ object Matching {
           .join(matchedV.select(col("x").as("u")), Seq("u"), "left_anti")
           .join(matchedV.select(col("x").as("v")), Seq("v"), "left_anti")
           .select("u", "v", "pe")
-          .lckpt(eager = false)
+          .lckpt()
         val nSel = sel.count()
         val nRem = eNext.count()
         rows += ((round, nSel, nRem))
@@ -525,5 +522,5 @@ object Matching {
       }
     }
     rows.toSeq.toDF("round", "n_matched", "n_remaining")
-   }
+  }
 }

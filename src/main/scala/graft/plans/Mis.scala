@@ -63,8 +63,7 @@ object Mis {
     */
   def trajectory(edges: DataFrame, maxRounds: Int,
                  salt: String = "mis:",
-                 forcePacked: Option[Boolean] = None): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+                 forcePacked: Option[Boolean] = None): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
@@ -76,14 +75,14 @@ object Mis {
       .distinct()
     // both directions: one row per (vertex, neighbor) — the shape the
     // per-vertex neighborhood minimum aggregates over. keyed("x") +
-    // IterPlan capture: the x-side probes (selected-neighborhood, the
+    // checkpoint leaf: the x-side probes (selected-neighborhood, the
     // residual's first restriction) run zero-exchange every round
     var adj = und.select(col("u").as("x"), col("v").as("y"))
       .unionAll(und.select(col("v").as("x"), col("u").as("y")))
       .keyed("x")
-      .lckpt(eager = false)
+      .lckpt()
 
-    val verts = adj.select(col("x")).distinct().lckpt(eager = false)
+    val verts = adj.select(col("x")).distinct().lckpt()
     // ONE aggregate scan over the distinct-vertex set decides everything
     // the setup needs: null-cast count (the loud guard), id range (the
     // packed-priority probe), and the initial active count — the old
@@ -124,7 +123,7 @@ object Mis {
     }
     var active = verts
       .select(col("x"), packedPriority(col("x")).as("pk"))
-      .lckpt(eager = false)
+      .lckpt()
 
     val rows = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
     var remaining = probe.getLong(0) // |verts| == |active| (1:1 select)
@@ -140,7 +139,7 @@ object Mis {
         val selected = active.hint("merge").join(nbrMin, Seq("x"), "left")
           .filter(col("npk").isNull || col("pk") < col("npk"))
           .select("x")
-          .lckpt(eager = false)
+          .lckpt()
         // retire the selected set and its whole neighborhood — probed on
         // the keyed x side (zero-exchange off the captured partitioning)
         val retiredNbrs = adj.hint("merge")
@@ -150,7 +149,7 @@ object Mis {
           .join(selected, Seq("x"), "left_anti")
           .hint("merge")
           .join(retiredNbrs, Seq("x"), "left_anti")
-          .lckpt(eager = false)
+          .lckpt()
         val nSelected = selected.count()
         val nRemaining = nextActive.count()
         rows += ((round, nSelected, nRemaining))
@@ -165,11 +164,11 @@ object Mis {
           .hint("merge")
           .join(nextActive.select(col("x").as("y")), "y")
           .select(col("y").as("x"), col("x").as("y"))
-          .lckpt(eager = false)
+          .lckpt()
         active = nextActive
         remaining = nRemaining
       }
     }
     rows.toSeq.toDF("round", "n_selected", "n_remaining")
-   }
+  }
 }

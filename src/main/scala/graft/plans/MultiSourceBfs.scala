@@ -65,18 +65,17 @@ object MultiSourceBfs {
     * within `maxDepth` rounds — one frontier for ALL seeds.
     */
   private def visitedSet(edges: DataFrame, starts: DataFrame,
-                         maxDepth: Int): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+                         maxDepth: Int): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(maxDepth >= 1, s"maxDepth must be positive: $maxDepth")
-    // keyed(u) + IterPlan capture: every level's frontier⋈edges join is
+    // keyed(u) + checkpoint leaf: every level's frontier⋈edges join is
     // zero-exchange/zero-sort on the (corpus-scale) edge side; the
     // frontier pays the per-level exchange. Merge-pinned: the checkpoint
     // leaves' captured stats read broadcast-small at test SF (p118 class)
     val e = edges.select(col("u"), col("v")).distinct()
-      .keyed("u").lckpt(eager = false)
+      .keyed("u").lckpt()
     var visited = starts.select(col("start"), col("start").as("node"),
-      lit(0).as("dist")).lckpt(eager = false)
+      lit(0).as("dist")).lckpt()
     var frontier = visited
     var depth = 0
     while (depth < maxDepth && !frontier.isEmpty) {
@@ -86,10 +85,10 @@ object MultiSourceBfs {
         .join(visited.select(col("start"), col("node")), Seq("start", "node"),
           "left_anti")
         .withColumn("dist", lit(depth))
-        .lckpt(eager = false)
-      visited = visited.unionByName(next).lckpt(eager = false)
+        .lckpt()
+      visited = visited.unionByName(next).lckpt()
       frontier = next
     }
     visited
-   }
+  }
 }

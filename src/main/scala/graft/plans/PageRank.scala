@@ -59,8 +59,7 @@ object PageRank {
   def personalizedScaled(edges: DataFrame, seedPred: org.apache.spark.sql.Column,
                          iters: Int, scale: Long = 1000000L,
                          dampNum: Long = 85L, dampDen: Long = 100L,
-                         edgesAreDistinct: Boolean = false): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+                         edgesAreDistinct: Boolean = false): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(iters >= 0 && scale % dampDen == 0 && dampNum >= 0 && dampNum <= dampDen,
       s"invalid pagerank params (iters=$iters scale=$scale damp=$dampNum/$dampDen)")
@@ -70,26 +69,26 @@ object PageRank {
     val base = edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
     val e = if (edgesAreDistinct) base else base.distinct()
-    // loop-static tables shaped by the loop join key ONCE (IterPlan):
+    // loop-static tables shaped by the loop join key ONCE (keyed):
     // each round's ranks⋈edges and vertices⋈inbound joins then run
-    // zero-exchange/zero-sort off the checkpoint-captured partitioning
+    // zero-exchange/zero-sort off the checkpoint leaf's partitioning
     val vertices = e.select(col("src").as("key"))
       .unionAll(e.select(col("dst").as("key")))
       .distinct()
       .keyed("key")
-      .lckpt(eager = false)
+      .lckpt()
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val withDeg = e.join(outDeg, "src")
       .select(col("src"), col("dst"), col("outdeg"))
       .keyed("src")
-      .lckpt(eager = false)
+      .lckpt()
 
     val seedBase = when(seedPred, lit(scale / dampDen * (dampDen - dampNum)))
       .otherwise(lit(0L))
     runScaled(vertices, withDeg.withColumnRenamed("outdeg", "tw")
         .withColumn("w", lit(1L)),
       seedPred, seedBase, iters, scale, dampNum, dampDen)
-   }
+  }
 
   /** WEIGHTED PageRank in the same exact scaled-integer arithmetic: a
     * source's rank mass splits across its out-edges PROPORTIONALLY to
@@ -104,8 +103,7 @@ object PageRank {
     */
   def weightedRanksScaled(edges: DataFrame, iters: Int, scale: Long = 1000000L,
                           dampNum: Long = 85L, dampDen: Long = 100L,
-                          edgesAreDistinct: Boolean = false): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+                          edgesAreDistinct: Boolean = false): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(iters >= 0 && scale % dampDen == 0 && dampNum >= 0 && dampNum <= dampDen,
       s"invalid pagerank params (iters=$iters scale=$scale damp=$dampNum/$dampDen)")
@@ -121,15 +119,15 @@ object PageRank {
       .unionAll(e.select(col("dst").as("key")))
       .distinct()
       .keyed("key")
-      .lckpt(eager = false)
+      .lckpt()
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("tw"))
     val withW = e.join(outW, "src")
       .select(col("src"), col("dst"), col("w"), col("tw"))
       .keyed("src")
-      .lckpt(eager = false)
+      .lckpt()
     runScaled(vertices, withW, lit(true),
       lit(scale / dampDen * (dampDen - dampNum)), iters, scale, dampNum, dampDen)
-   }
+  }
 
   /** The shared iteration: `edges` carries `(src, dst, w, tw)`; each
     * round is one ranks⋈edges hash join + one dst aggregate over the
@@ -142,8 +140,8 @@ object PageRank {
     var ranks = vertices.withColumn("rank_scaled",
       when(seedPred, lit(scale)).otherwise(lit(0L)))
     for (i <- 1 to iters) {
-      // both per-round joins merge-pinned: with the loop tables keyed +
-      // checkpoint-captured (IterPlan) the SMJ is zero-exchange and its
+      // both per-round joins merge-pinned: with the loop tables keyed
+      // behind partition-keeping checkpoints the SMJ is zero-exchange and its
       // sorted sides skip both sorts — whereas the checkpoint leaves'
       // captured parquet-descended stats read broadcast-small at test SF,
       // and an unpinned plan re-broadcast the EDGE table every round (a
@@ -160,8 +158,8 @@ object PageRank {
         .select(col("key"),
           (seedBase + expr(s"($dampNum * coalesce(inc, 0L)) div $dampDen"))
             .as("rank_scaled"))
-      if (i == iters) graft.core.IterPlan.debugDump(s"pagerank round $i", next)
-      ranks = next.lckpt(eager = false)
+      ranks = next.lckpt()
+      graft.core.IterPlan.debugDump(s"pagerank round $i", next)
     }
     ranks
   }

@@ -42,8 +42,8 @@ object SccLabels {
     */
   private[graft] def propagate(edges: DataFrame, state: DataFrame,
                                delta: DataFrame): (DataFrame, DataFrame) = {
-    // both joins merge-pinned: the loop tables are keyed + checkpoint-
-    // captured (IterPlan), so the SMJs are zero-exchange and mostly
+    // both joins merge-pinned: the loop tables are keyed behind
+    // partition-keeping checkpoints, so the SMJs are zero-exchange and mostly
     // zero-sort; unpinned, the leaves' captured stats read broadcast-
     // small at test SF and a corpus-scale side would re-broadcast per
     // round (the p118 class)
@@ -67,23 +67,21 @@ object SccLabels {
     import spark.implicits._
     import graft.core.IterPlan.IterDatasetOps
 
-    graft.core.IterPlan.coPartitioned(spark) {
-
     val ed0 = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst") && col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-      .lckpt(eager = false)
+      .lckpt()
     // both propagation directions join on THEIR src, so each keeps its
     // own keyed checkpoint copy (one Exchange each at construction;
-    // IterPlan captures the partitioning so every round's edges⋈delta
+    // the checkpoint keeps the partitioning, so every round's edges⋈delta
     // join is zero-exchange/zero-sort)
-    val ed = ed0.keyed("src").lckpt(eager = false)
+    val ed = ed0.keyed("src").lckpt()
     val rev = ed0.select(col("dst").as("src"), col("src").as("dst"))
-      .keyed("src").lckpt(eager = false)
+      .keyed("src").lckpt()
     val verts = ed0.select(col("src").as("x"))
       .unionAll(ed0.select(col("dst").as("x"))).distinct()
       .keyed("x")
-      .lckpt(eager = false)
+      .lckpt()
 
     def stats(f: DataFrame, b: DataFrame, r: Int): (Int, Long, Long, Long) = {
       val row = f.join(b.withColumnRenamed("lbl", "blbl"), "x")
@@ -93,10 +91,9 @@ object SccLabels {
       (r, row.getLong(0), row.getLong(1), row.getLong(2))
     }
 
-    // a trivial projection over the keyed verts checkpoint — left
-    // UN-checkpointed so round 1 reads the captured hash(x) partitioning
-    // straight through the Project (its own checkpoint came back
-    // UnknownPartitioning and made round 1 re-exchange both init sides)
+    // a trivial projection over the keyed verts checkpoint, left
+    // un-checkpointed: round 1 reads the leaf's hash(x) partitioning
+    // straight through the Project at no extra job
     val init = verts.select(col("x"), col("x").as("lbl"))
     var f = init; var df = init
     var b = init; var db = init
@@ -110,13 +107,12 @@ object SccLabels {
       } else {
         val (f2, df2) = propagate(ed, f, df)
         val (b2, db2) = propagate(rev, b, db)
+        f = f2.lckpt(); df = df2.lckpt()
         graft.core.IterPlan.debugDump(s"scc forward round $r", f2)
-        f = f2.lckpt(eager = false); df = df2.lckpt(eager = false)
-        b = b2.lckpt(eager = false); db = db2.lckpt(eager = false)
+        b = b2.lckpt(); db = db2.lckpt()
         rows += stats(f, b, r)
       }
     }
     rows.toSeq.toDF("round", "n_certified", "f_mass", "b_mass")
-    }
   }
 }

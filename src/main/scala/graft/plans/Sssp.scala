@@ -27,8 +27,7 @@ object Sssp {
     * Returns the label table `(start, node, dist)` for every node
     * reached within `rounds` hops.
     */
-  def bounded(edges: DataFrame, starts: DataFrame, rounds: Int): DataFrame =
-   graft.core.IterPlan.coPartitioned(edges.sparkSession) {
+  def bounded(edges: DataFrame, starts: DataFrame, rounds: Int): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(rounds >= 1, s"rounds must be positive: $rounds")
     // row-level contract enforcement: a null or non-positive weight
@@ -41,15 +40,15 @@ object Sssp {
         coalesce(col("w").cast("string"), lit("null")),
         lit(" on edge u="), col("u").cast("string"),
         lit(" v="), col("v").cast("string"))))
-    // keyed(u) + IterPlan capture: the per-round frontier⋈edges join
+    // keyed(u) + checkpoint leaf: the per-round frontier⋈edges join
     // never re-Exchanges the (corpus-scale) edge table; merge-pinned
     // since the checkpoint leaves' captured stats read broadcast-small
     // at test SF (the p118 class at a lake)
     val e = edges.select(col("u"), col("v"), w.as("w"))
       .keyed("u")
-      .lckpt(eager = false)
+      .lckpt()
     var dist = starts.select(col("start"), col("start").as("node"),
-      lit(0L).as("dist")).lckpt(eager = false)
+      lit(0L).as("dist")).lckpt()
     var frontier = dist
     var r = 0
     while (r < rounds && !frontier.isEmpty) {
@@ -58,14 +57,14 @@ object Sssp {
         .select(col("start"), col("v").as("node"), (col("dist") + col("w")).as("dist"))
       val next = dist.unionByName(cand)
         .groupBy("start", "node").agg(min("dist").as("dist"))
-        .lckpt(eager = false)
+        .lckpt()
       frontier = next.hint("merge").join(
           dist.withColumnRenamed("dist", "old"), Seq("start", "node"), "left")
         .filter(col("old").isNull || col("dist") < col("old"))
         .select("start", "node", "dist")
-        .lckpt(eager = false)
+        .lckpt()
       dist = next
     }
     dist
-   }
+  }
 }

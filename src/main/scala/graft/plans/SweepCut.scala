@@ -46,7 +46,7 @@ object SweepCut {
     require(maxPrefix >= 1, s"maxPrefix must be positive: $maxPrefix")
     val base = edges.select(col("src"), col("dst"))
     val e = (if (edgesAreDistinct) base else base.distinct())
-      .lckpt(eager = false)
+      .lckpt()
     val deg = e.groupBy(col("src").as("key")).agg(count(lit(1)).as("deg"))
     val ppr = PageRank.personalizedScaled(e, seedPred, iters,
         edgesAreDistinct = true)
@@ -58,7 +58,7 @@ object SweepCut {
         struct(col("score"), -col("key")), maxPrefix)
       .withColumn("rk", row_number().over(
         Window.orderBy(col("score").desc, col("key"))))
-      .lckpt(eager = false)
+      .lckpt()
     val within = e
       .join(top.select(col("key").as("ka"), col("rk").as("ra")),
         col("src") === col("ka"))

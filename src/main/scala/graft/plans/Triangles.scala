@@ -95,12 +95,12 @@ object Triangles {
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
       .distinct()
-      .lckpt(eager = false)
+      .lckpt()
 
     val deg = und.select(col("u").as("x"))
       .unionAll(und.select(col("v").as("x")))
       .groupBy("x").agg(count(lit(1)).as("d"))
-      .lckpt(eager = false)
+      .lckpt()
     (und, deg)
   }
 
@@ -119,7 +119,7 @@ object Triangles {
       when(uFirst, col("u")).otherwise(col("v")).as("sid"),
       when(uFirst, col("v")).otherwise(col("u")).as("tid"),
       when(uFirst, col("dv")).otherwise(col("du")).as("td"))
-      .lckpt(eager = false)
+      .lckpt()
 
     // wedges at each apex: ordered pairs of out-neighbors, b before c in
     // the SAME (degree, id) order the closing edge is oriented by — a
@@ -229,7 +229,7 @@ object Triangles {
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
       .distinct()
-    val b = canon(base).lckpt(eager = false)
+    val b = canon(base).lckpt()
     incrementalCountsFrom(b, delta,
       counts(b).select(col("n_triangles").as("t_base")), salt)
   }
@@ -261,7 +261,7 @@ object Triangles {
       .select(col("u"), col("v"),
         md5(concat(lit(salt), col("u").cast("string"), lit(":"),
           col("v").cast("string"))).as("k"))
-      .lckpt(eager = false)
+      .lckpt()
 
     baseMirrored match {
       case Some(mb) =>
@@ -290,7 +290,7 @@ object Triangles {
         // (TrianglesSpec split==merged).
         val adjD = d.select(col("u").as("x"), col("v").as("y"), col("k"))
           .unionAll(d.select(col("v").as("x"), col("u").as("y"), col("k")))
-          .lckpt(eager = false)
+          .lckpt()
         // merged degrees without moving the base: per-x base degree is a
         // bucket-local aggregate (no exchange), the delta correction is
         // delta-sized, and a full outer join stitches them
@@ -307,7 +307,7 @@ object Triangles {
           when(uFirst, col("u")).otherwise(col("v")).as("pv"),
           when(uFirst, col("v")).otherwise(col("u")).as("ot"),
           col("k"))
-          .lckpt(eager = false)
+          .lckpt()
 
         // base and delta neighbor probes separately: the base side needs
         // no key test (wv = 0 kept unconditionally in the merged form),
@@ -345,7 +345,7 @@ object Triangles {
           .unionAll(d.select(col("u"), col("v"), lit(1).as("wv"), col("k")))
         val adj = labeled.select(col("u").as("x"), col("v").as("y"), col("wv"), col("k"))
           .unionAll(labeled.select(col("v").as("x"), col("u").as("y"), col("wv"), col("k")))
-          .lckpt(eager = false)
+          .lckpt()
         val deg = adj.groupBy("x").agg(count(lit(1)).as("dg"))
 
         // orient each delta edge at its lower-(degree, id) endpoint
@@ -429,7 +429,7 @@ object Triangles {
       when(uFirst, col("u")).otherwise(col("v")).as("sid"),
       when(uFirst, col("v")).otherwise(col("u")).as("tid"),
       when(uFirst, col("dv")).otherwise(col("du")).as("td"))
-      .lckpt(eager = false)
+      .lckpt()
     val e1 = oriented.select(col("sid").as("a"), col("tid").as("b"), col("td").as("bd"))
     val e2 = oriented.select(col("sid").as("a2"), col("tid").as("c"), col("td").as("cd"))
     val wedges = e1.join(e2, col("a") === col("a2") &&
@@ -468,7 +468,7 @@ object Triangles {
       when(uFirst, col("u")).otherwise(col("v")).as("sid"),
       when(uFirst, col("v")).otherwise(col("u")).as("tid"),
       when(uFirst, col("dv")).otherwise(col("du")).as("td"))
-      .lckpt(eager = false)
+      .lckpt()
     val e1 = oriented.select(col("sid").as("a"), col("tid").as("b"), col("td").as("bd"))
     val e2 = oriented.select(col("sid").as("a2"), col("tid").as("c"), col("td").as("cd"))
     val wedges = e1.join(e2, col("a") === col("a2") &&

@@ -87,9 +87,6 @@ object Ingest {
   /** Colandr screening export: keep only included citations and project
     * the source fields the reference consumes (FIXTURES §6).
     */
-  def syncColandr(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path).transform(colandrIncluded)
-
   def colandrIncluded(df: DataFrame): DataFrame =
     df.filter(col("citation_screening_status") === "included")
       .select(
@@ -127,12 +124,6 @@ object Ingest {
         "morphotype", "value")
       .select(col("depth").cast("double"), col("morphotype"), col("value").cast("double"))
   }
-
-  /** Read a TSV data table file and unpivot (reference parse:
-    * tab-delimited, first row headers, all cells float).
-    */
-  def readDataTable(spark: SparkSession, path: String): DataFrame =
-    dataTableLong(spark.read.option("sep", "\t").option("header", "true").csv(path))
 
   /** A5 — `DataTable.depths()` equivalence: pivot long form back to a
     * per-depth map (reference `Datasets.fs:92-95`).

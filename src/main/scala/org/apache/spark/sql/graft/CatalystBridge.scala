@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.physical.PartitioningCollection
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.storage.StorageLevel
 
 /** Bridge into Spark's `private[sql]` Column↔Expression converters —
   * required since Spark 4 made `Column` wrap a `ColumnNode` instead of an
@@ -38,6 +42,37 @@ object CatalystBridge {
     org.apache.spark.sql.classic.Dataset(
       ds.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       ds.queryExecution.withCachedData)(ds.encoder)
+
+  /** `ds` executed now and persisted at `level` behind a lineage-cut leaf
+    * that keeps the partitioning and ordering the rows were written in.
+    *
+    * Spark's own `localCheckpoint` gives the leaf the partitioning of the
+    * plan as planned, and an adaptive plan reports `UnknownPartitioning`
+    * until it has run, so every consumer would shuffle the rows again.
+    * Here the checkpoint runs first and the leaf takes the partitioning
+    * and ordering of the adaptive plan's final form, which are those of
+    * the rows as stored: a join or aggregate keyed the same way reads
+    * the leaf without an Exchange. A `PartitioningCollection` (a join's
+    * output) keeps its first member. Statistics and constraints stay as
+    * Spark computed them.
+    */
+  def partitionKeepingCheckpoint[T](ds: Dataset[T], level: StorageLevel): Dataset[T] = {
+    val checkpointed = ds.localCheckpoint(true, level)
+    val leaf = checkpointed.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    // the checkpoint ran `ds`'s own QueryExecution, so its adaptive plan is final
+    val ran = ds.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+    val partitioning = ran.outputPartitioning match {
+      case PartitioningCollection(first +: _) => first
+      case p => p
+    }
+    val session = ds.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val kept = LogicalRDD(leaf.output, leaf.rdd, partitioning, ran.outputOrdering,
+      leaf.isStreaming)(session, Some(leaf.computeStats()), Some(leaf.constraints))
+    org.apache.spark.sql.classic.Dataset(session, kept)(ds.encoder)
+  }
 
   /** Free the persisted RDDs behind a `localCheckpoint()`ed DataFrame
     * (including checkpoints under projections/filters) —

@@ -51,7 +51,7 @@ class CkptSpec extends SparkSpec {
     // local-cluster, with or without the A/B override set)
     val noRep = sys.env.get("SPARK_GRAFT_CKPT_NO_REPLICA").contains("1")
     assert(Ckpt.level(df) === Ckpt.levelFor(spark.sparkContext.master, noRep))
-    val c = df.lckpt(eager = true)
+    val c = df.lckpt()
     assert(c.count() === 100L)
     assert(c.agg(org.apache.spark.sql.functions.sum("id")).head.getLong(0) === 4950L)
   }

@@ -66,13 +66,6 @@ class ConfSpec extends SparkSpec {
     assert(spark.conf.get(Width) == before)
   }
 
-  test("loopWidth is a quarter of the session width, floor 8") {
-    val widths = Seq(4, 8, 32, 35, 36, 200).map { p =>
-      p -> Conf.scoped(spark)(Width -> p.toString)(IterPlan.loopWidth(spark))
-    }
-    assert(widths == Seq(4 -> "8", 8 -> "8", 32 -> "8", 35 -> "8", 36 -> "9", 200 -> "50"))
-  }
-
   test("iterative loops leave the session conf as they found it") {
     val g = GraphGen.randGraph(17L, 40, 120)
     val uv = g.toDF("u", "v")

@@ -2,65 +2,88 @@ package graft.core
 
 import graft.SparkSpec
 import graft.core.Ckpt._
+import graft.core.IterPlan.IterDatasetOps
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
-  UnknownPartitioning}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, HashPartitioningLike,
+  Partitioning}
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
-/** What [[IterPlan.coPartitioned]] exists for: a `localCheckpoint` leaf
-  * keeps its child's hash partitioning only when the plan was built with
-  * AQE off. Under AQE the leaf captures the un-executed adaptive plan's
-  * `UnknownPartitioning`, and every round re-exchanges the loop-static
-  * tables; inside the scope a join of two checkpointed, co-partitioned
-  * tables needs no exchange of its own.
+/** The leaf `lckpt` leaves behind keeps the partitioning its rows were
+  * stored in, with AQE on: a `keyed` loop-static table reports hash
+  * partitioning at the session width, an aggregate reports its final
+  * (possibly coalesced) hash partitioning, and a join between the two
+  * exchanges only the aggregate side.
   */
-class IterPlanSpec extends SparkSpec {
+class IterPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def leafPartitioning(df: DataFrame): Seq[Partitioning] =
     df.queryExecution.optimizedPlan.collect { case l: LogicalRDD => l.outputPartitioning }
 
+  private def width: Int = spark.conf.get("spark.sql.shuffle.partitions").toInt
+
   /** A loop-static edge table keyed on `src` and a rank table aggregated
     * on `key`, both checkpointed as a loop round does. */
   private def tables(): (DataFrame, DataFrame) = {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     val edges = spark.range(10000)
       .select((col("id") % 500).as("src"), (col("id") % 700).as("dst"))
-      .distinct().repartition(col("src")).lckpt(eager = false)
+      .distinct().keyed("src").lckpt()
     // keyed off `id % 500`, not `id`: an aggregate straight over a range
     // reuses the range's own rangepartitioning and never hash-exchanges
     val ranks = spark.range(2000)
       .select((col("id") % 500).as("key"), lit(1000000L).as("rank"))
-      .groupBy("key").agg(sum("rank").as("rank")).lckpt(eager = false)
+      .groupBy("key").agg(sum("rank").as("rank")).lckpt()
     (edges, ranks)
   }
 
-  test("outside coPartitioned an AQE checkpoint leaf reports UnknownPartitioning") {
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    val (edges, ranks) = tables()
-    for (t <- Seq(edges, ranks)) {
-      val parts = leafPartitioning(t)
-      assert(parts.nonEmpty && parts.forall(_.isInstanceOf[UnknownPartitioning]), parts)
+  private def keyNames(p: HashPartitioningLike): Seq[String] =
+    p.expressions.flatMap(_.references.map(_.name))
+
+  test("a keyed leaf reports hashpartitioning at the session width") {
+    val (edges, _) = tables()
+    leafPartitioning(edges) match {
+      case Seq(h: HashPartitioning) =>
+        assert(h.numPartitions == width, h)
+        assert(keyNames(h) == Seq("src"), h)
+      case other => fail(s"expected one hash-partitioned leaf, got $other")
     }
   }
 
-  test("inside coPartitioned the leaf keeps hashpartitioning and the join adds no exchange") {
-    IterPlan.coPartitioned(spark) {
-      val (edges, ranks) = tables()
-      for (t <- Seq(edges, ranks)) {
-        val parts = leafPartitioning(t)
-        assert(parts.nonEmpty && parts.forall(_.isInstanceOf[HashPartitioning]), parts)
-      }
-      // merge-pinned as the loops pin it: the leaves' captured stats read
-      // broadcast-small, and a broadcast would hide the co-partitioning
-      val inc = edges.hint("merge").join(ranks, col("src") === col("key"))
-        .groupBy("dst").agg(sum(expr("rank div 1")).as("inc"))
-      inc.write.format("noop").mode("overwrite").save()
-      val plan = inc.queryExecution.executedPlan
-      // the aggregate's shuffle is the only one; ReusedExchangeExec is not
-      // an Exchange, so a reused subtree would not count here
-      val exchanges = plan.collect { case x: Exchange => x }
-      assert(exchanges.size == 1, plan.toString)
+  test("an aggregate leaf reports its final hash partitioning, not Unknown") {
+    val (_, ranks) = tables()
+    leafPartitioning(ranks) match {
+      // HashPartitioningLike covers AQE's coalesced form of the same hash
+      case Seq(h: HashPartitioningLike) =>
+        assert(keyNames(h) == Seq("key"), h)
+        assert(h.numPartitions == ranks.rdd.getNumPartitions, h)
+      case other => fail(s"expected one hash-partitioned leaf, got $other")
     }
+  }
+
+  test("a join of the two adds no exchange or sort above the keyed side") {
+    val (edges, ranks) = tables()
+    val keyedRdd = edges.queryExecution.optimizedPlan.collectFirst {
+      case l: LogicalRDD => l.rdd
+    }.get
+    // merge-pinned as the loops pin it: the leaves' stats read
+    // broadcast-small, and a broadcast would hide the co-partitioning
+    val inc = edges.hint("merge").join(ranks, col("src") === col("key"))
+      .groupBy("dst").agg(sum(expr("rank div 1")).as("inc"))
+    inc.write.format("noop").mode("overwrite").save()
+    val plan = inc.queryExecution.executedPlan
+    def readsKeyed(p: SparkPlan): Boolean =
+      find(p) { case s: RDDScanExec => s.rdd eq keyedRdd; case _ => false }.isDefined
+    val joins = collect(plan) { case j: SortMergeJoinExec => j }
+    assert(joins.size == 1, plan.toString)
+    val keyedSide = joins.head.children.filter(readsKeyed)
+    assert(keyedSide.size == 1, plan.toString)
+    // AdaptiveSparkPlanHelper's collect descends into the query stages,
+    // so a shuffle stage on the keyed side would show here
+    assert(collect(keyedSide.head) { case x: Exchange => x }.isEmpty, plan.toString)
+    assert(collect(keyedSide.head) { case s: SortExec => s }.isEmpty, plan.toString)
   }
 }

@@ -10,10 +10,14 @@ import org.apache.spark.sql.functions._
   * every mutation returns a new [[GraphState]] — but each operation is a
   * lazy, distributed Dataset transformation instead of an O(n) list walk.
   *
-  * Scale posture: single-key probes broadcast the probe side
-  * (`broadcast(keysDf)` + semi/anti join) so they never shuffle the graph;
-  * bulk mutations are unions + dedup that Catalyst plans as hash
-  * aggregations; cascade deletes are two anti-joins. Persisted layout
+  * Scale posture: point reads name their keys as literals. A key or
+  * key-set lookup is one filter on the scan, and a hop from one source
+  * broadcasts its few edges against the node set, so neither shuffles
+  * nor builds a hash of the graph. Small driver-side batches
+  * commit through `Transactions.commit`, which probes only the keys the
+  * batch names. The Dataset-level mutations below take batches of any
+  * size: their checks are semi/anti joins and their edge dedup a hash
+  * aggregate; cascade deletes are two anti-joins. Persisted layout
   * partitions by `nodeType` ([[GraphIO]]) so type-filtered scans prune files.
   *
   * Cached inputs must be plan leaves. Mutations are unions, and
@@ -37,15 +41,19 @@ final case class GraphState(nodes: Dataset[NodeRow], edges: Dataset[EdgeRow]) {
   def nodeByKey(key: String): Dataset[NodeRow] =
     nodes.filter(col("key") === key)
 
-  /** Batch variant — broadcast the (small) key set, preserve input order
-    * via an ordinal column like the reference preserves list order
-    * (`Storage.fs:233-237`).
+  /** Batch variant: the rows of `keys` in input order, as the reference
+    * preserves list order (`Storage.fs:233-237`). A key given twice comes
+    * back twice; a missing key is skipped. One job: an `isin` filter on
+    * the scan, each found row's input positions read from a literal
+    * key → positions map, and a sort of the found rows in one partition.
     */
   def nodesByKeys(keys: Seq[String]): DataFrame = {
-    val s = spark
-    import s.implicits._
-    val probe = keys.zipWithIndex.toDF("key", "ord")
-    nodes.join(broadcast(probe), "key").orderBy("ord").drop("ord")
+    val positions = keys.zipWithIndex.groupMap(_._1)(_._2)
+    nodes.filter(col("key").isin(positions.keys.toSeq: _*))
+      .withColumn("ord", explode(element_at(typedLit(positions), col("key"))))
+      .coalesce(1)
+      .sortWithinPartitions("ord")
+      .drop("ord")
   }
 
   /** P3/P7 — all nodes of one type (reference `Graph.fs:550-554`,
@@ -84,10 +92,12 @@ final case class GraphState(nodes: Dataset[NodeRow], edges: Dataset[EdgeRow]) {
 
   /** J2 — one-hop dereference: traverse a relation (from every source, or
     * one) and materialize the sink nodes (reference `Library.fs:845-900`).
+    * From one source, the few matching edges are the broadcast side, so
+    * the node set is streamed rather than built into a hash table.
     */
   def hop(relType: String, from: Option[String] = None): DataFrame = {
     val e0 = edges.filter(col("relType") === relType)
-    val e = from.fold(e0)(k => e0.filter(col("src") === k))
+    val e = from.fold(e0)(k => broadcast(e0.filter(col("src") === k)))
     e.join(nodes, e("dst") === nodes("key"))
       .select(
         e("src").as("from"),
@@ -119,7 +129,11 @@ final case class GraphState(nodes: Dataset[NodeRow], edges: Dataset[EdgeRow]) {
   // ------------------------------------------------------------ mutations
 
   /** M1 — strict insert; error on duplicate key (reference `Graph.fs:63-70`).
-    * The duplicate check is a broadcast-friendly semi-join (one action).
+    * The check semi-joins the new nodes against every node key and counts
+    * keys within the batch; its one `collect` runs about three jobs. This
+    * Dataset form serves batches that are themselves Datasets (g10); a
+    * driver-side batch commits through `Transactions.commit`, which
+    * probes only its own keys.
     */
   def addNodes(newNodes: Dataset[NodeRow]): Either[Seq[String], GraphState] = {
     val existing = newNodes
@@ -173,7 +187,10 @@ final case class GraphState(nodes: Dataset[NodeRow], edges: Dataset[EdgeRow]) {
   /** M6 — add edges with dedup of identical `(src,dst,weight,relType,
     * relPayload)` tuples (reference `Graph.fs:134-152`) and foreign-key
     * validation of BOTH endpoints — fixing the reference bug where the sink
-    * check re-tests the source (`Graph.fs:137-138`).
+    * check re-tests the source (`Graph.fs:137-138`). Both checks anti-join
+    * against every node key and the dedup aggregates the whole edge set,
+    * which every later read of the result runs again. It serves Dataset
+    * batches and [[addRelationsConstrained]]; g09 runs its unchecked form.
     */
   def addRelations(newEdges: Dataset[EdgeRow]): Either[Seq[String], GraphState] = {
     val keys = nodes.select(col("key"))

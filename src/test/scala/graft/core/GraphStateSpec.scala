@@ -29,6 +29,19 @@ class GraphStateSpec extends SparkSpec {
     assert(g.addNodes(fresh).toOption.get.nodes.count() == 4)
   }
 
+  test("P1/P2 nodesByKeys returns rows in input order, repeats keys given twice, skips missing ones") {
+    val g = fixture
+    val keys = Seq("contextnode_a", "missing", "taxonnode_genus_salix", "taxonnode_family_salicaceae",
+      "contextnode_a")
+    val got = g.nodesByKeys(keys)
+    assert(got.columns.toSeq == Seq("key", "nodeType", "prettyName", "payload"))
+    val rows = got.collect().toSeq
+    assert(rows.map(_.getString(0)) == keys.filter(_ != "missing"))
+    assert(rows.head.getString(2) == "Site A")
+    assert(g.nodesByKeys(Nil).collect().isEmpty)
+    assert(g.nodesByKeys(Seq("missing")).collect().isEmpty)
+  }
+
   test("M2 addNodesOrSkip is idempotent and keeps the old row (ref Graph.fs:72-79)") {
     val g = fixture
     val mixed = Seq(

@@ -123,6 +123,75 @@ class TransactionsSpec extends SparkSpec {
     assert(Transactions.commit(baseGraph, bad).isLeft)
   }
 
+  // ------------------------------------------------ commit vs M1 → M6
+
+  /** The Dataset-level path `commit` replaces: strict insert, then edges
+    * with FK checks and whole-set tuple dedup. */
+  private def viaDatasets(g: GraphState, batch: Transactions.TxBatch): Either[String, GraphState] =
+    for {
+      g1 <- g.addNodes(batch.nodes.toDS()).left.map(d => s"duplicate keys: ${d.mkString(",")}")
+      g2 <- g1.addRelations(batch.edges.toDS()).left.map(d => s"dangling endpoints: ${d.mkString(",")}")
+    } yield g2
+
+  private def differentialBase: GraphState = GraphState(
+    Seq(
+      NodeRow("taxonnode_a", NodeTypes.TaxonNode, "A", "{}"),
+      NodeRow("taxonnode_b", NodeTypes.TaxonNode, "B", "{}"),
+      NodeRow("contextnode_c", NodeTypes.ContextNode, "C", """{"x":1}""")).toDS(),
+    Seq(
+      EdgeRow("taxonnode_a", "taxonnode_b", 1, "IsA", "{}"),
+      EdgeRow("contextnode_c", "taxonnode_a", 1, "IsLocatedAt", null)).toDS())
+
+  private def outcome(r: Either[String, GraphState]) = r.map(g =>
+    (g.nodes.collect().toSeq.sortBy(_.key), g.edges.collect().toSeq.sortBy(_.toString)))
+    .left.map { msg =>
+      val (prefix, keys) = msg.splitAt(msg.indexOf(": ") + 2)
+      (prefix, keys.split(",").toSet)
+    }
+
+  test("commit matches addNodes → addRelations on verdict, message keys and result sets") {
+    import Transactions.TxBatch
+    def n(k: String) = NodeRow(k, NodeTypes.ContextNode, k.toUpperCase, "{}")
+    def e(s: String, d: String, rel: String = "IsLocatedAt") = EdgeRow(s, d, 1, rel, "{}")
+    val cases = Seq(
+      "key repeated within the batch" -> TxBatch(Seq(n("contextnode_x"), n("contextnode_x")), Nil),
+      "key already in the graph" -> TxBatch(Seq(n("contextnode_x"), n("taxonnode_a")), Nil),
+      "dangling src" -> TxBatch(Seq(n("contextnode_x")),
+        Seq(e("contextnode_x", "taxonnode_a"), e("missing_src", "taxonnode_b"))),
+      "dangling dst" -> TxBatch(Seq(n("contextnode_x")),
+        Seq(e("contextnode_x", "missing_dst"), e("contextnode_x", "missing_dst", "Other"))),
+      "duplicate key and dangling endpoint" -> TxBatch(Seq(n("taxonnode_b")),
+        Seq(e("taxonnode_b", "missing_dst"))),
+      "edge already in the base" -> TxBatch(Seq(n("contextnode_x")),
+        Seq(EdgeRow("taxonnode_a", "taxonnode_b", 1, "IsA", "{}"),
+          EdgeRow("contextnode_c", "taxonnode_a", 1, "IsLocatedAt", null),
+          e("contextnode_x", "taxonnode_a"))),
+      "duplicate edges within the batch" -> TxBatch(Nil,
+        Seq(e("taxonnode_b", "contextnode_c"), e("taxonnode_b", "contextnode_c"), e("taxonnode_a", "contextnode_c"))),
+      "edges between new nodes only" -> TxBatch(Seq(n("contextnode_x"), n("contextnode_y")),
+        Seq(e("contextnode_x", "contextnode_y"))),
+      "empty batch" -> TxBatch(Nil, Nil))
+    val base = differentialBase
+    cases.foreach { case (name, batch) =>
+      val want = outcome(viaDatasets(base, batch))
+      assert(outcome(Transactions.commit(base, batch)) == want, name)
+    }
+    // the verdicts the cases are meant to reach
+    val verdicts = cases.map { case (name, b) => name -> Transactions.commit(base, b).left.map(_.takeWhile(_ != ':')) }.toMap
+    assert(verdicts("key repeated within the batch") == Left("duplicate keys"))
+    assert(verdicts("duplicate key and dangling endpoint") == Left("duplicate keys"))
+    assert(verdicts("dangling dst") == Left("dangling endpoints"))
+    assert(verdicts("edge already in the base").isRight && verdicts("empty batch").isRight)
+  }
+
+  test("commit reports at most 20 keys") {
+    import Transactions.TxBatch
+    val batch = TxBatch(Nil, (1 to 30).map(i => EdgeRow("taxonnode_a", s"missing_$i", 1, "IsA", "{}")))
+    val Left(msg) = Transactions.commit(differentialBase, batch): @unchecked
+    assert(msg.startsWith("dangling endpoints: "))
+    assert(msg.stripPrefix("dangling endpoints: ").split(",").length == 20)
+  }
+
   test("M13 CompleteSection fold matches the reference case list (ref Library.fs:715-753)") {
     import Transactions._
     val Seq(s1, s2, s3) = CodingSections

@@ -20,6 +20,11 @@ import org.apache.spark.storage.StorageLevel
   *    therefore joined every round without an Exchange on its side, and
   *    an aggregate's result keeps its (possibly coalesced) hash
   *    partitioning.
+  *  - The leaf reports the bytes its blocks were stored at, not the
+  *    optimizer's estimate. One rule then picks every join over a
+  *    checkpoint leaf: `spark.sql.autoBroadcastJoinThreshold`. A
+  *    frontier-scale leaf broadcasts; a corpus-scale one sort-merges,
+  *    with no Exchange on a `keyed` side. No loop pins a strategy.
   *  - Nothing is deferred: when `lckpt` returns, the blocks exist and
   *    the job that wrote them has finished.
   *

@@ -55,7 +55,7 @@ object Betweenness {
     require(scale >= 1, s"scale must be positive: $scale")
     // keyed(u) + checkpoint leaf: both the forward levels and the
     // backward dependency pass join the edge table on u — zero-exchange
-    // on the edge side every level (merge-pinned; p118 class otherwise)
+    // on the edge side of every level that sort-merges
     val e = edges.select(col("u"), col("v")).distinct()
       .keyed("u").lckpt()
 
@@ -68,7 +68,7 @@ object Betweenness {
     var depth = 0
     while (depth < maxDepth && !frontier.isEmpty) {
       depth += 1
-      val next = frontier.join(e.hint("merge"), col("node") === col("u"))
+      val next = frontier.join(e, col("node") === col("u"))
         .select(col("start"), col("v").as("node"), col("sigma"))
         .join(visited, Seq("start", "node"), "left_anti")
         .groupBy("start", "node").agg(sum(col("sigma")).as("sigma"))
@@ -107,7 +107,7 @@ object Betweenness {
           col("sdel").cast("string"),
           lit(" — reduce scale or maxDepth"))))
       val terms = cur
-        .join(e.hint("merge"), col("node") === col("u"))
+        .join(e, col("node") === col("u"))
         .select(col("start"), col("node"), col("sigma"), col("v").as("succ"))
         .join(succ, Seq("start", "succ"))
         .select(col("start"), col("node"), term.as("term"))

@@ -74,11 +74,10 @@ object DensestSubgraph {
           .filter(col("d") * lit(n) * lit(epsDen) >
             lit(2L * (epsDen + epsNum)) * lit(m))
           .select("x")
-        // merge-pinned endpoint restriction, keyed back to u for the
-        // next round's free probe (the KCore discipline)
-        val next = cur.hint("merge")
+        // endpoint restriction, keyed back to u for the next round's
+        // free probe (the KCore discipline)
+        val next = cur
           .join(keep.withColumnRenamed("x", "u"), "u")
-          .hint("merge")
           .join(keep.withColumnRenamed("x", "v"), "v")
           .select("u", "v").keyed("u").lckpt()
         CatalystBridge.unpersistCheckpoint(cur)

@@ -72,13 +72,9 @@ object Hits {
       // under AQE (independent query stages), so the join genuinely ran
       // twice. The normalized scores themselves stay a cheap
       // scan+broadcast projection — no second checkpoint needed.
-      // Round joins merge-pinned: the leaves' captured parquet-descended
-      // stats read broadcast-small at test SF, and an unpinned plan
-      // re-broadcasts a corpus-scale side per half-round (the p118
-      // class); the pinned SMJ is zero-exchange on the keyed sides.
-      val araw = eSrc.hint("merge").join(hubs, col("key") === col("src"))
+      val araw = eSrc.join(hubs, col("key") === col("src"))
         .groupBy(col("dst")).agg(sum(col("h")).as("raw"))
-      val aRaw = vertices.hint("merge")
+      val aRaw = vertices
         .join(araw, col("key") === col("dst"), "left")
         .select(col("key"), coalesce(col("raw"), lit(0L)).as("raw"))
         .lckpt()
@@ -86,9 +82,9 @@ object Hits {
         .crossJoin(broadcast(aRaw.agg(max(col("raw")).as("mx"))))
         .select(col("key"),
           expr(s"(raw * $scale) div greatest(coalesce(mx, 1L), 1L)").as("a"))
-      val hraw = eDst.hint("merge").join(auths, col("key") === col("dst"))
+      val hraw = eDst.join(auths, col("key") === col("dst"))
         .groupBy(col("src")).agg(sum(col("a")).as("raw"))
-      val hRaw0 = vertices.hint("merge")
+      val hRaw0 = vertices
         .join(hraw, col("key") === col("src"), "left")
         .select(col("key"), coalesce(col("raw"), lit(0L)).as("raw"))
       val hRaw = hRaw0.lckpt()

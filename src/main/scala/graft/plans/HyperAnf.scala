@@ -73,12 +73,7 @@ object HyperAnf {
     */
   private[graft] def roundMax(adjSelf: DataFrame, regs: DataFrame): DataFrame = {
     val regsY = regs.withColumnRenamed("x", "y")
-    // merge-pinned: adjSelf is keyed(y) and its checkpoint leaf keeps that
-    // and regs comes back hash(x)-partitioned from the round aggregate,
-    // so the SMJ is zero-exchange (one regs-side sort, vertex-sized);
-    // unpinned, the leaves' captured stats read broadcast-small at test
-    // SF and the corpus-scale adjacency would re-broadcast per round
-    adjSelf.hint("merge").join(regsY, "y")
+    adjSelf.join(regsY, "y")
       .groupBy("x")
       .agg(max(col("rg0")).as("rg0"),
         (1 until M).map(j => max(col(s"rg$j")).as(s"rg$j")): _*)

@@ -76,18 +76,15 @@ object KCore {
       // owns its data before its parents are freed (localCheckpoint
       // truncates lineage — an unpersisted parent is unrecoverable)
       val keep = deg.filter(col("d") >= k).select("key").lckpt()
-      val removed = alive.hint("merge").join(keep, Seq("key"), "left_anti")
+      val removed = alive.join(keep, Seq("key"), "left_anti")
         .select(col("key"), lit(round).as("peel_round")).lckpt()
       if (removed.isEmpty) converged = true
       else {
         // endpoint restriction: the u probe is zero-exchange (cur is
         // keyed/captured on u), the v probe re-keys the shrunk edge
         // set; keyed back to u so the NEXT round's u probe stays free.
-        // merge-pinned — the checkpoint leaves' captured stats read
-        // broadcast-small at test SF (the p118 class at a lake).
-        val next = cur.hint("merge")
+        val next = cur
           .join(keep.withColumnRenamed("key", "u"), "u")
-          .hint("merge")
           .join(keep.withColumnRenamed("key", "v"), "v")
           .select("u", "v").keyed("u").lckpt()
         removedAll = removedAll.unionByName(removed)

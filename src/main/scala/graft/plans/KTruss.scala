@@ -125,11 +125,7 @@ object KTruss {
         // as the oracle's no-op unroll does
         rows += ((round, rows.last._2, rows.last._3))
       } else {
-        // merge-pinned round joins (here and the tri filter below): the
-        // keyed sides make them zero-exchange SMJs, and the checkpoint
-        // leaves' captured stats read broadcast-small at test SF — an
-        // unpinned plan would re-broadcast a corpus-scale side per round
-        val kept0 = e.hint("merge").join(supports(tri), Seq("u", "v"))
+        val kept0 = e.join(supports(tri), Seq("u", "v"))
           .filter(col("sup") >= minSup)
         val kept = kept0.lckpt()
         graft.core.IterPlan.debugDump(s"ktruss support round $round", kept0)
@@ -144,11 +140,9 @@ object KTruss {
           // The e side is zero-exchange in ALL THREE probes (alias-aware
           // partitioning: keyed (u, v) satisfies (u1, v1)/(u2, v2)/
           // (u3, v3) under the renames); tri pays the key changes.
-          tri = tri.hint("merge")
+          tri = tri
             .join(e.select(col("u").as("u1"), col("v").as("v1")), Seq("u1", "v1"))
-            .hint("merge")
             .join(e.select(col("u").as("u2"), col("v").as("v2")), Seq("u2", "v2"))
-            .hint("merge")
             .join(e.select(col("u").as("u3"), col("v").as("v3")), Seq("u3", "v3"))
             .lckpt()
         }

@@ -33,10 +33,6 @@ object LabelPropagation {
     val nbrs = edges.select(col("u"), col("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct()
-    // keyed(v) + checkpoint leaf: the per-round neighbor-label join is
-    // zero-exchange on the (corpus-scale) edge side; merge-pinned since
-    // the checkpoint leaves' captured stats read broadcast-small at test
-    // SF (the p118 class at a lake)
     val und = nbrs.unionByName(nbrs.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .keyed("v")
@@ -50,7 +46,7 @@ object LabelPropagation {
       // join/aggregate/window stays a visible, optimizable plan
       val prev = if (i == 1) labels else labels.lckpt()
       if (i > 1) graft.core.IterPlan.debugDump(s"lpa round ${i - 1}", labels)
-      labels = und.hint("merge")
+      labels = und
         .join(prev.withColumnRenamed("key", "v"), "v")
         .select(col("u").as("key"), col("label"))
         .groupBy("key", "label").agg(count(lit(1)).as("n"))

@@ -145,12 +145,10 @@ object Matching {
         graft.core.IterPlan.debugDump(s"wmatch select round $round", sel0)
         val matchedV = sel.select(col("u").as("x"))
           .unionAll(sel.select(col("v").as("x"))).distinct()
-        // u probe merge-pinned (zero-exchange: e keyed u, matchedV comes
-        // hash(x)-partitioned off its distinct); the v probe is left to
-        // the planner — e is not v-partitioned, so a pin would force a
-        // full-edge Exchange+sort that the stats-chosen broadcast avoids
-        // at test SF, and at scale the grown stats pick the SMJ anyway
-        val eNext0 = e.hint("merge")
+        // a sort-merge u probe is zero-exchange (e keyed u, matchedV
+        // comes hash(x)-partitioned off its distinct); e is not
+        // v-partitioned, so the v probe exchanges e unless it broadcasts
+        val eNext0 = e
           .join(matchedV.select(col("x").as("u")), Seq("u"), "left_anti")
           .join(matchedV.select(col("x").as("v")), Seq("v"), "left_anti")
           .select("u", "v", "w", "pe")
@@ -212,11 +210,9 @@ object Matching {
     val superOf = verts.join(cmap, Seq("x"), "left")
       .select(col("x"), coalesce(col("sx"), col("x")).as("sx"))
       .lckpt()
-    // u probe zero-exchange off prepWeighted's keyed(u) and merge-pinned;
-    // the v probe is stats-chosen (e is not v-partitioned — a pin would
-    // force the full-edge Exchange+sort a broadcast avoids at test SF,
-    // and the grown stats pick the SMJ at scale)
-    val rek = e.hint("merge")
+    // a sort-merge u probe reads prepWeighted's keyed(u) in place; e is
+    // not v-partitioned, so the v probe exchanges e unless it broadcasts
+    val rek = e
       .join(superOf.select(col("x").as("u"), col("sx").as("su")), "u")
       .join(superOf.select(col("x").as("v"), col("sx").as("sv")), "v")
       .lckpt()
@@ -502,14 +498,14 @@ object Matching {
         val sel = roundSelect(e).lckpt()
         val matchedV = sel.select(col("u").as("x"))
           .unionAll(sel.select(col("v").as("x"))).distinct()
-        // u probe pinned, v probe stats-chosen (see weightedTrajectory's
-        // residual note). The u probe stays zero-exchange in every round
-        // only while the v probe broadcasts: a broadcast anti-join keeps
-        // eNext's hash(u) across the checkpoint (IterPlan.debugDump, g62
-        // and g66 at sf0.001, rounds 1-3). If the stats pick a sort-merge
+        // see weightedTrajectory's residual note. A sort-merge u probe
+        // stays zero-exchange in every round only while the v probe
+        // broadcasts: a broadcast anti-join keeps eNext's hash(u) across
+        // the checkpoint (IterPlan.debugDump, g62 and g66 at sf0.001,
+        // rounds 1-3). If the size rule picks a sort-merge
         // v probe instead, its Exchange leaves eNext hash(v)-partitioned
         // and each later round's u probe re-exchanges the residual edges.
-        val eNext = e.hint("merge")
+        val eNext = e
           .join(matchedV.select(col("x").as("u")), Seq("u"), "left_anti")
           .join(matchedV.select(col("x").as("v")), Seq("v"), "left_anti")
           .select("u", "v", "pe")

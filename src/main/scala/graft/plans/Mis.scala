@@ -136,18 +136,17 @@ object Mis {
         // neighborhood minimum per active vertex: one hash join of the
         // active adjacency against priorities + a map-side-combined min
         val nbrMin = neighborhoodMin(adj, packedPriority)
-        val selected = active.hint("merge").join(nbrMin, Seq("x"), "left")
+        val selected = active.join(nbrMin, Seq("x"), "left")
           .filter(col("npk").isNull || col("pk") < col("npk"))
           .select("x")
           .lckpt()
         // retire the selected set and its whole neighborhood — probed on
         // the keyed x side (zero-exchange off the captured partitioning)
-        val retiredNbrs = adj.hint("merge")
+        val retiredNbrs = adj
           .join(selected, "x")
           .select(col("y").as("x")).distinct()
-        val nextActive = active.hint("merge")
+        val nextActive = active
           .join(selected, Seq("x"), "left_anti")
-          .hint("merge")
           .join(retiredNbrs, Seq("x"), "left_anti")
           .lckpt()
         val nSelected = selected.count()
@@ -159,9 +158,8 @@ object Mis {
         // (y, x)-relabelling preserves content while the alias-aware
         // hash(y) partitioning lands on the new "x" — the next round's
         // x probes are free again without a second re-key.
-        adj = adj.hint("merge")
+        adj = adj
           .join(nextActive.select("x"), "x")
-          .hint("merge")
           .join(nextActive.select(col("x").as("y")), "y")
           .select(col("y").as("x"), col("x").as("y"))
           .lckpt()

@@ -68,10 +68,6 @@ object MultiSourceBfs {
                          maxDepth: Int): DataFrame = {
     import graft.core.IterPlan.IterDatasetOps
     require(maxDepth >= 1, s"maxDepth must be positive: $maxDepth")
-    // keyed(u) + checkpoint leaf: every level's frontier⋈edges join is
-    // zero-exchange/zero-sort on the (corpus-scale) edge side; the
-    // frontier pays the per-level exchange. Merge-pinned: the checkpoint
-    // leaves' captured stats read broadcast-small at test SF (p118 class)
     val e = edges.select(col("u"), col("v")).distinct()
       .keyed("u").lckpt()
     var visited = starts.select(col("start"), col("start").as("node"),
@@ -80,12 +76,13 @@ object MultiSourceBfs {
     var depth = 0
     while (depth < maxDepth && !frontier.isEmpty) {
       depth += 1
-      val next = frontier.join(e.hint("merge"), col("node") === col("u"))
+      val next0 = frontier.join(e, col("node") === col("u"))
         .select(col("start"), col("v").as("node")).distinct()
         .join(visited.select(col("start"), col("node")), Seq("start", "node"),
           "left_anti")
         .withColumn("dist", lit(depth))
-        .lckpt()
+      val next = next0.lckpt()
+      graft.core.IterPlan.debugDump(s"bfs level $depth", next0)
       visited = visited.unionByName(next).lckpt()
       frontier = next
     }

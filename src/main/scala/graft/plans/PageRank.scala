@@ -140,20 +140,13 @@ object PageRank {
     var ranks = vertices.withColumn("rank_scaled",
       when(seedPred, lit(scale)).otherwise(lit(0L)))
     for (i <- 1 to iters) {
-      // both per-round joins merge-pinned: with the loop tables keyed
-      // behind partition-keeping checkpoints the SMJ is zero-exchange and its
-      // sorted sides skip both sorts — whereas the checkpoint leaves'
-      // captured parquet-descended stats read broadcast-small at test SF,
-      // and an unpinned plan re-broadcast the EDGE table every round (a
-      // per-round driver collect + build, and at a lake it is the p118
-      // corpus-side mis-broadcast class)
-      val inbound = edges.hint("merge")
+      val inbound = edges
         .join(ranks, col("src") === col("key"))
         // uniform callers pass w = 1, tw = outdeg — rank·1 div outdeg is
         // bit-identical to the original rank div outdeg form
         .select(col("dst"), expr("rank_scaled * w div tw").as("contrib"))
         .groupBy("dst").agg(sum(col("contrib")).as("inc"))
-      val next = vertices.hint("merge")
+      val next = vertices
         .join(inbound, col("key") === col("dst"), "left")
         .select(col("key"),
           (seedBase + expr(s"($dampNum * coalesce(inc, 0L)) div $dampDen"))

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * IMPROVED last round send messages (the [[Sssp]] relaxation
   * discipline), so message volume tracks the shrinking frontier, not
   * V·rounds. Per round per direction: one hash join (edges ⋈ delta),
-  * one map-side-combined min, one merge join against the state. Labels
+  * one map-side-combined min, one join against the state. Labels
   * are vertex ids — plain integer `min()` is the whole comparison, so a
   * fixed-depth full-propagation SQL unroll computes the identical
   * state and the oracle replays every round exactly.
@@ -42,15 +42,10 @@ object SccLabels {
     */
   private[graft] def propagate(edges: DataFrame, state: DataFrame,
                                delta: DataFrame): (DataFrame, DataFrame) = {
-    // both joins merge-pinned: the loop tables are keyed behind
-    // partition-keeping checkpoints, so the SMJs are zero-exchange and mostly
-    // zero-sort; unpinned, the leaves' captured stats read broadcast-
-    // small at test SF and a corpus-scale side would re-broadcast per
-    // round (the p118 class)
-    val upd = edges.hint("merge")
+    val upd = edges
       .join(delta.select(col("x").as("src"), col("lbl").as("m")), "src")
       .groupBy(col("dst").as("x")).agg(min(col("m")).as("nm"))
-    val joined = state.hint("merge").join(upd, Seq("x"), "left")
+    val joined = state.join(upd, Seq("x"), "left")
     val merged = joined
       .select(col("x"), least(col("lbl"), coalesce(col("nm"), col("lbl"))).as("lbl"))
     val nextDelta = joined.filter(col("nm") < col("lbl"))

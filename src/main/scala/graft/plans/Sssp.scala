@@ -40,10 +40,6 @@ object Sssp {
         coalesce(col("w").cast("string"), lit("null")),
         lit(" on edge u="), col("u").cast("string"),
         lit(" v="), col("v").cast("string"))))
-    // keyed(u) + checkpoint leaf: the per-round frontier⋈edges join
-    // never re-Exchanges the (corpus-scale) edge table; merge-pinned
-    // since the checkpoint leaves' captured stats read broadcast-small
-    // at test SF (the p118 class at a lake)
     val e = edges.select(col("u"), col("v"), w.as("w"))
       .keyed("u")
       .lckpt()
@@ -53,12 +49,12 @@ object Sssp {
     var r = 0
     while (r < rounds && !frontier.isEmpty) {
       r += 1
-      val cand = frontier.join(e.hint("merge"), col("node") === col("u"))
+      val cand = frontier.join(e, col("node") === col("u"))
         .select(col("start"), col("v").as("node"), (col("dist") + col("w")).as("dist"))
       val next = dist.unionByName(cand)
         .groupBy("start", "node").agg(min("dist").as("dist"))
         .lckpt()
-      frontier = next.hint("merge").join(
+      frontier = next.join(
           dist.withColumnRenamed("dist", "old"), Seq("start", "node"), "left")
         .filter(col("old").isNull || col("dist") < col("old"))
         .select("start", "node", "dist")

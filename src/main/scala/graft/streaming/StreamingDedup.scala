@@ -101,11 +101,12 @@ object StreamingDedup {
     // its duplicate evidence (k rows when it matches k accepted docs,
     // nulls when fresh) plus a replay marker; both outputs and both store
     // appends below are narrow filters over this.
-    val verdict = newSigs
+    val verdict0 = newSigs
       .join(dupPairs, Seq("id"), "left_outer")
       .join(storedSigs.select(col("id"), lit(true).as("replayed")), // replay idempotence
         Seq("id"), "left_outer")
-      .lckpt()
+    val verdict = verdict0.lckpt()
+    graft.core.IterPlan.debugDump("dedup batch verdict", verdict0)
 
     val dups = verdict.filter(col("dup_of").isNotNull)
       .select(col("id"), col("dup_of"), col("est_jaccard"))

@@ -14,6 +14,8 @@ import org.apache.spark.sql.SparkSession
   * pre-execution physical plan at the given SF dir, so broadcast
   * choices over corpus-derived subtrees can be reviewed at a realistic
   * scale (plan only — nothing executes, so auditing sf4.0 is free).
+  * Checkpoint leaves report the bytes they stored, so a broadcast chosen
+  * over one is sized from a measurement, not an estimate.
   *
   * `runMain graft.tools.BroadcastAudit <sfDir> <name1,name2,...|ALL>`
   */

@@ -2,11 +2,12 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.PartitioningCollection
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.{BlockStatus, RDDBlockId, StorageLevel}
 
 /** Bridge into Spark's `private[sql]` Column↔Expression converters —
   * required since Spark 4 made `Column` wrap a `ColumnNode` instead of an
@@ -44,7 +45,8 @@ object CatalystBridge {
       ds.queryExecution.withCachedData)(ds.encoder)
 
   /** `ds` executed now and persisted at `level` behind a lineage-cut leaf
-    * that keeps the partitioning and ordering the rows were written in.
+    * that keeps the partitioning and ordering the rows were written in,
+    * and reports the size they were stored at.
     *
     * Spark's own `localCheckpoint` gives the leaf the partitioning of the
     * plan as planned, and an adaptive plan reports `UnknownPartitioning`
@@ -53,8 +55,18 @@ object CatalystBridge {
     * and ordering of the adaptive plan's final form, which are those of
     * the rows as stored: a join or aggregate keyed the same way reads
     * the leaf without an Exchange. A `PartitioningCollection` (a join's
-    * output) keeps its first member. Statistics and constraints stay as
-    * Spark computed them.
+    * output) keeps its first member. Constraints stay as Spark computed
+    * them.
+    *
+    * The leaf's `sizeInBytes` is the bytes its blocks hold per the
+    * driver's `BlockManagerMaster` ([[storedSize]]), not the optimizer's
+    * estimate, which is wrong both ways below a join or an `explode`.
+    * Block reports are synchronous asks to that master, so its record is
+    * complete when the job returns; the listener-fed store behind
+    * `SparkContext.getRDDStorageInfo` can lag and read 0. So
+    * `spark.sql.autoBroadcastJoinThreshold` is the one join rule over
+    * checkpoint leaves: under it a leaf broadcasts, over it the join
+    * sort-merges, exchanging only the side that is not `keyed`.
     */
   def partitionKeepingCheckpoint[T](ds: Dataset[T], level: StorageLevel): Dataset[T] = {
     val checkpointed = ds.localCheckpoint(true, level)
@@ -69,10 +81,24 @@ object CatalystBridge {
       case p => p
     }
     val session = ds.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val master = session.sparkContext.env.blockManager.master
+    val blocks = leaf.rdd.partitions.indices.map(i =>
+      master.getBlockStatus(RDDBlockId(leaf.rdd.id, i), askStorageEndpoints = false).values)
+    val size = storedSize(blocks, session.sessionState.conf.defaultSizeInBytes)
     val kept = LogicalRDD(leaf.output, leaf.rdd, partitioning, ran.outputOrdering,
-      leaf.isStreaming)(session, Some(leaf.computeStats()), Some(leaf.constraints))
+      leaf.isStreaming)(session, Some(Statistics(sizeInBytes = size)), Some(leaf.constraints))
     org.apache.spark.sql.classic.Dataset(session, kept)(ds.encoder)
   }
+
+  /** The bytes a checkpoint stored, from the block statuses the master
+    * holds for each of its partitions (one entry per replica). A
+    * partition counts its largest replica once. When any partition has
+    * no block, the size is unknown and the result is `default`
+    * (`spark.sql.defaultSizeInBytes`, which never broadcasts).
+    */
+  def storedSize(partitions: Seq[Iterable[BlockStatus]], default: Long): BigInt =
+    if (partitions.exists(_.isEmpty)) BigInt(default)
+    else partitions.map(replicas => BigInt(replicas.map(b => b.memSize + b.diskSize).max)).sum
 
   /** Free the persisted RDDs behind a `localCheckpoint()`ed DataFrame
     * (including checkpoints under projections/filters) —

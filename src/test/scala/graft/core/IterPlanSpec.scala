@@ -9,14 +9,15 @@ import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, HashParti
 import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
-import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 /** The leaf `lckpt` leaves behind keeps the partitioning its rows were
   * stored in, with AQE on: a `keyed` loop-static table reports hash
   * partitioning at the session width, an aggregate reports its final
   * (possibly coalesced) hash partitioning, and a join between the two
-  * exchanges only the aggregate side.
+  * follows the one size rule: the small side broadcasts, and with
+  * broadcasts off the join sort-merges exchanging only the aggregate side.
   */
 class IterPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -64,26 +65,44 @@ class IterPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("a join of the two adds no exchange or sort above the keyed side") {
+  /** The rank-weighted message sum of a PageRank round, run; returns the
+    * final plan and the keyed edge side of its one join. */
+  private def roundJoin(): (SparkPlan, SparkPlan) = {
     val (edges, ranks) = tables()
     val keyedRdd = edges.queryExecution.optimizedPlan.collectFirst {
       case l: LogicalRDD => l.rdd
     }.get
-    // merge-pinned as the loops pin it: the leaves' stats read
-    // broadcast-small, and a broadcast would hide the co-partitioning
-    val inc = edges.hint("merge").join(ranks, col("src") === col("key"))
+    val inc = edges.join(ranks, col("src") === col("key"))
       .groupBy("dst").agg(sum(expr("rank div 1")).as("inc"))
     inc.write.format("noop").mode("overwrite").save()
     val plan = inc.queryExecution.executedPlan
     def readsKeyed(p: SparkPlan): Boolean =
       find(p) { case s: RDDScanExec => s.rdd eq keyedRdd; case _ => false }.isDefined
-    val joins = collect(plan) { case j: SortMergeJoinExec => j }
+    val joins = collect(plan) {
+      case j: BroadcastHashJoinExec => j
+      case j: SortMergeJoinExec => j
+    }
     assert(joins.size == 1, plan.toString)
     val keyedSide = joins.head.children.filter(readsKeyed)
     assert(keyedSide.size == 1, plan.toString)
-    // AdaptiveSparkPlanHelper's collect descends into the query stages,
-    // so a shuffle stage on the keyed side would show here
-    assert(collect(keyedSide.head) { case x: Exchange => x }.isEmpty, plan.toString)
-    assert(collect(keyedSide.head) { case s: SortExec => s }.isEmpty, plan.toString)
+    (plan, keyedSide.head)
+  }
+
+  // AdaptiveSparkPlanHelper's collect descends into the query stages, so
+  // a shuffle stage on the keyed side would show in these checks
+
+  test("at the session's threshold the small rank leaf broadcasts against the keyed edges") {
+    val (plan, keyedSide) = roundJoin()
+    assert(collect(plan) { case j: BroadcastHashJoinExec => j }.size == 1, plan.toString)
+    assert(collect(keyedSide) { case x: Exchange => x }.isEmpty, plan.toString)
+  }
+
+  test("with broadcasts off the same join sort-merges with no exchange or sort above the keyed side") {
+    Conf.scoped(spark)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val (plan, keyedSide) = roundJoin()
+      assert(collect(plan) { case j: SortMergeJoinExec => j }.size == 1, plan.toString)
+      assert(collect(keyedSide) { case x: Exchange => x }.isEmpty, plan.toString)
+      assert(collect(keyedSide) { case s: SortExec => s }.isEmpty, plan.toString)
+    }
   }
 }

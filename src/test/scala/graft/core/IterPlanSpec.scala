@@ -97,7 +97,7 @@ class IterPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(collect(keyedSide) { case x: Exchange => x }.isEmpty, plan.toString)
   }
 
-  test("with broadcasts off the same join sort-merges with no exchange or sort above the keyed side") {
+  test("a join of the two adds no exchange or sort above the keyed side") {
     Conf.scoped(spark)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (plan, keyedSide) = roundJoin()
       assert(collect(plan) { case j: SortMergeJoinExec => j }.size == 1, plan.toString)

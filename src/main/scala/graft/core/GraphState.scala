@@ -15,10 +15,17 @@ import org.apache.spark.sql.functions._
   * broadcasts its few edges against the node set, so neither shuffles
   * nor builds a hash of the graph. Small driver-side batches
   * commit through `Transactions.commit`, which probes only the keys the
-  * batch names. The Dataset-level mutations below take batches of any
-  * size: their checks are semi/anti joins and their edge dedup a hash
-  * aggregate; cascade deletes are two anti-joins. Persisted layout
-  * partitions by `nodeType` ([[GraphIO]]) so type-filtered scans prune files.
+  * batch names. What such a filter costs is set by the layout it scans.
+  * The cached TPC-H graph (`TpchGraph.cachedGraph`) holds nodes
+  * range-partitioned and sorted on `key`, and edges on `(relType, src)`,
+  * at the session width: a point read runs one task per partition, and
+  * the in-memory batch stats prune it to about one batch. Range order,
+  * not hash order, is what lets the stats prune: under a hash layout
+  * every batch spans the whole key range. The Dataset-level mutations
+  * below take batches of any size: their checks are semi/anti joins and
+  * their edge dedup a hash aggregate; cascade deletes are two
+  * anti-joins. Persisted layout partitions by `nodeType` ([[GraphIO]])
+  * so type-filtered scans prune files.
   *
   * Cached inputs must be plan leaves. Mutations are unions, and
   * `union`/`unionByName` flatten nested unions when the plan is built: a

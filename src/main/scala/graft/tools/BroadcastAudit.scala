@@ -13,7 +13,12 @@ import org.apache.spark.sql.SparkSession
   * estimate, which is what this prints: every join line of each query's
   * pre-execution physical plan at the given SF dir, so broadcast
   * choices over corpus-derived subtrees can be reviewed at a realistic
-  * scale (plan only — nothing executes, so auditing sf4.0 is free).
+  * scale. Printing a plan is not free: every `lckpt` is eager, so each
+  * loop and checkpointed pipeline runs its rounds while its plan is
+  * built, and artifact-backed queries build their stores. One sweep of
+  * every query at a 10-tile (sf1.0) dir took about 50 min on 4 vCPUs
+  * with a 5 GB heap; the default 40-tile sf4.0 dir needs the 24 GB
+  * heap, which a 15 GB machine cannot give it.
   * Checkpoint leaves report the bytes they stored, so a broadcast chosen
   * over one is sized from a measurement, not an estimate.
   *

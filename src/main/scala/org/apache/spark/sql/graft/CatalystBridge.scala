@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.physical.PartitioningCollection
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.{BlockStatus, RDDBlockId, StorageLevel}
 
 /** Bridge into Spark's `private[sql]` Column↔Expression converters —
@@ -38,11 +39,21 @@ object CatalystBridge {
     * top of it keep an `InMemoryTableScan` with its column and batch
     * pruning and its size statistics. The leaf shares the cache entry's
     * buffers but not its identity: `unpersist` must go through `ds`.
+    *
+    * The leaf reports no logical output ordering. `InMemoryRelation`'s
+    * `newInstance` (a self-join's second side) renames the output but
+    * keeps the ordering's old attribute ids, and a later `withOutput`
+    * then fails on an id it cannot find. The scan still reports the
+    * cached plan's ordering to the physical planner.
     */
-  def cachedLeaf[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] =
+  def cachedLeaf[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] = {
+    val leaf = ds.queryExecution.withCachedData match {
+      case r: InMemoryRelation => r.makeCopy(Array(r.output, r.cacheBuilder, Nil))
+      case p => p
+    }
     org.apache.spark.sql.classic.Dataset(
-      ds.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      ds.queryExecution.withCachedData)(ds.encoder)
+      ds.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession], leaf)(ds.encoder)
+  }
 
   /** `ds` executed now and persisted at `level` behind a lineage-cut leaf
     * that keeps the partitioning and ordering the rows were written in,

@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
+import org.apache.spark.storage.StorageLevel
 
 /** [[TpchGraph.cachedGraph]] stays cached under the unions callers put on
   * it: `unionByName` flattens nested unions while building the plan, so a
@@ -78,6 +80,33 @@ class TpchGraphCacheSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(got.nonEmpty)
       assert(got == read(old).collect().map(_.toString).sorted.toSeq)
     }
+  }
+
+  test("twoHop and a self-join over leaves of sorted persists match the uncached graph") {
+    // a sorted cache reports an output ordering, which a self-join's
+    // fresh instance of the leaf must carry over to its new attributes
+    val n = TpchGraph.nodes(spark, sf, withPayload = false)
+      .sortWithinPartitions("key").persist(StorageLevel.MEMORY_AND_DISK)
+    val e = TpchGraph.edges(spark, sf, withPayload = false)
+      .sortWithinPartitions("relType", "src").persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val sorted = GraphState(CatalystBridge.cachedLeaf(n), CatalystBridge.cachedLeaf(e))
+      val plain = GraphState(TpchGraph.nodes(spark, sf, withPayload = false),
+        TpchGraph.edges(spark, sf, withPayload = false))
+      val li = first(plain, "lineitem")
+      val reads: Seq[GraphState => DataFrame] = Seq(
+        _.twoHop("PartOf", "PlacedBy").filter(col("a") === li),
+        g => {
+          val orders = g.nodes.filter(col("nodeType") === "order")
+          orders.as("x").join(g.nodes.as("y"), col("x.key") === col("y.key"))
+            .select(col("x.key"), col("y.nodeType"))
+        })
+      reads.foreach { read =>
+        val got = read(sorted).collect().map(_.toString).sorted.toSeq
+        assert(got.nonEmpty)
+        assert(got == read(plain).collect().map(_.toString).sorted.toSeq)
+      }
+    } finally { n.unpersist(); e.unpersist() }
   }
 
   test("a new session rebuilds the graph and frees every persist of the old one") {

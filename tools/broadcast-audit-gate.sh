@@ -4,9 +4,13 @@
 # compressed parquet bytes and building a broadcast join whose build
 # side materializes at corpus scale — must FAIL the round when it
 # reappears, not the next mem2g sweep. This sweeps every registered
-# query's pre-execution physical plan at a realistic scale dir
-# (plan-only, nothing executes) and diffs the statically-chosen
-# broadcast lines against the audited-legitimate baseline
+# query's pre-execution physical plan at a realistic scale dir and
+# diffs the statically-chosen broadcast lines against the
+# audited-legitimate baseline. Planning is not free: every lckpt is
+# eager, so each loop and checkpointed pipeline runs its rounds while
+# its plan is built. One sweep at a 10-tile (sf1.0) dir took about
+# 50 min on 4 vCPUs with SPARK_DRIVER_MEM=5g; the default 40-tile sf4.0
+# dir needs SPARK_DRIVER_MEM=24g and does not fit a 15 GB machine
 # (tools/broadcast-audit-baseline.txt — reviewed line by line in r15/r16:
 # bounded sketch tables, strata, hot-bucket lists, eval fingerprint
 # sets, top-k rerank sides, fixed walk frontiers, single-row scalar
@@ -37,13 +41,13 @@ if [ ! -f "$BASELINE" ]; then
   echo "[bcast-gate] FAIL: $BASELINE missing — review a sweep's BCAST lines and seed it:"
   echo "  AUDIT_KEEP=/tmp/bcast_audit.txt tools/broadcast-audit-gate.sh $SF_DIR  # sweep survives the failure"
   echo "  (then review each BCAST line, add justification comments, commit)"
-  # ADVICE r16: without AUDIT_KEEP the ~25-min sweep would be thrown away
+  # ADVICE r16: without AUDIT_KEEP the sweep (about 50 min at sf1.0) would be thrown away
   # on exit 1 anyway — fail fast unless the caller asked to keep it
   [ -n "${AUDIT_KEEP:-}" ] || exit 1
 fi
 
 # AUDIT_OUT reuses a saved sweep (iterating on the baseline without
-# re-paying the ~25 min all-queries plan sweep); AUDIT_KEEP saves this
+# re-paying the all-queries sweep); AUDIT_KEEP saves this
 # run's sweep there. The sweep needs a large heap: plan CONSTRUCTION for
 # the artifact-backed queries executes their store builds at sf4.0
 # (SPARK_DRIVER_MEM=24g, same as any sf1+ sweep that touches g43-class

@@ -72,11 +72,6 @@ object ArtifactStore {
   /** Catalog-safe table name for an artifact. */
   private def tableName(name: String) = s"graft_art_${name.replaceAll("[^A-Za-z0-9_]", "_")}"
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
-
   /** Row count of a stored artifact as recorded at its last rebuild
     * (meta line 4). `None` for artifacts written before counts were
     * recorded — callers must treat that as "mass unknown" and take
@@ -168,7 +163,7 @@ object ArtifactStore {
         val df = build
         spark.sql(s"DROP TABLE IF EXISTS $tbl")
         java.nio.file.Files.deleteIfExists(meta)
-        if (java.nio.file.Files.exists(data)) deleteRecursively(data.toFile)
+        org.apache.commons.io.FileUtils.deleteQuietly(data.toFile)
         df.write.format("parquet")
           .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
           .option("path", data.toString)

@@ -50,12 +50,8 @@ object GraphIO {
     Seq(s"${prefix}_nodes", s"${prefix}_edges").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val warehouse = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      val loc = java.nio.file.Paths.get(warehouse, t)
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-      }
+      val loc = new java.io.File(warehouse, t)
+      if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
     }
     g.nodes.write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, "key").sortBy("key")
@@ -82,55 +78,4 @@ object GraphIO {
       .withColumn("recomputed", recompute)
       .filter(!(col("recomputed") <=> col("prettyName"))) // null-safe: null↔value IS drift
       .select("key", "nodeType", "prettyName", "recomputed")
-
-  /** Small-file compaction for append-heavy stores (streaming upserts —
-    * [[graft.streaming.GraphStream]], [[graft.streaming.StreamingDedup]] —
-    * add one file set per micro-batch; thousands of tiny parquet files
-    * destroy scan throughput via per-file open/footer costs). Rewrites
-    * the dataset into ~`targetFileMB` files sized from the actual on-disk
-    * bytes. Returns (filesBefore, filesAfter).
-    *
-    * Concurrency contract: writers MUST be quiesced for the duration —
-    * files appended after the rewrite reads the dataset would be deleted
-    * with the old files (plain parquet directories have no transaction
-    * log; a table format is the at-scale answer for online compaction).
-    * The delete+rename pair is also not crash-atomic: on failure between
-    * the two, the compacted data survives at `<path>.compact-tmp` for
-    * manual recovery.
-    *
-    * `partitionBy` must name the dataset's partition columns (e.g.
-    * `nodeType` for the nodes store) — compacting a partitioned layout
-    * flat would strip partition pruning and collide with later
-    * partitioned appends.
-    */
-  def compact(spark: SparkSession, path: String, targetFileMB: Int = 128,
-              partitionBy: Seq[String] = Nil): (Int, Int) = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(hPath), s"no dataset at $path")
-    def parquetFiles(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) buf += f
-      }
-      buf.toSeq
-    }
-    val before = parquetFiles(hPath)
-    val bytes = before.map(_.getLen).sum
-    val targetFiles = math.max(1, math.ceil(bytes / (targetFileMB * 1024.0 * 1024.0)).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact-tmp")
-    val df = spark.read.parquet(path)
-    val writer =
-      (if (partitionBy.nonEmpty)
-         df.repartition(targetFiles, partitionBy.map(col): _*).write.partitionBy(partitionBy: _*)
-       else df.repartition(targetFiles).write)
-        .mode(SaveMode.Overwrite)
-    writer.parquet(tmp.toString)
-    val after = parquetFiles(tmp).size
-    fs.delete(hPath, true)
-    require(fs.rename(tmp, hPath), s"rename $tmp -> $hPath failed")
-    (before.size, after)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, Dataset}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, greatest, least}
 
 /** Shaping helpers for per-round iterative loops (PageRank, HITS,
   * k-core, SCC, k-truss, HyperANF, MIS, matching, …).
@@ -27,6 +27,19 @@ object IterPlan {
     if (sys.env.get("SPARK_GRAFT_ITER_DEBUG").contains("1"))
       System.err.println(s"[iterplan] $tag plan:\n" +
         df.queryExecution.executedPlan.toString)
+
+  /** The simple undirected graph of `edges` `(u, v)` (any orientation):
+    * one row per unordered pair, least endpoint first, self-loops out.
+    * No `isNotNull` test is needed: `least`/`greatest` skip a null, so a
+    * row with one null endpoint reads as a self-loop, and a row with two
+    * nulls compares null; the `=!=` filter drops both. Catalyst would
+    * not drop such a test itself, so writing one only adds conjuncts.
+    */
+  def simpleUndirected(edges: DataFrame): DataFrame =
+    edges
+      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
 
   implicit class IterDatasetOps[T](private val ds: Dataset[T]) extends AnyVal {
     /** Shape a LOOP-STATIC table for zero-exchange per-round joins: one

@@ -13,13 +13,8 @@ object TempStores {
 
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      created.forEach(p => deleteRecursively(p.toFile))
+      created.forEach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
     }, "graft-temp-store-cleanup"))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
   }
 
   /** A fresh temp directory, registered for recursive deletion at JVM exit. */

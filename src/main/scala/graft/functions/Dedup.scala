@@ -628,7 +628,7 @@ object Dedup {
   /** Embedding-cosine near-duplicate pairs: all `(id_a < id_b)` with
     * cosine ≥ `minCos`. This exact form broadcasts one side — use it on a
     * bounded or pre-bucketed set; at corpus scale feed each
-    * [[Similarity.lshBuckets]] bucket through it so the quadratic term is
+    * [[Similarity.lshBucket]] bucket through it so the quadratic term is
     * per-bucket.
     */
   def embeddingNearDups(df: DataFrame, id: Column, vec: Column, minCos: Double): DataFrame = {
@@ -782,8 +782,9 @@ object Dedup {
     * p22's oracle).
     */
   /** Per-table sign-LSH bucketing: unions one `(…data cols…, tbl,
-    * bucket)` projection per table, with the shared `seed = 7 + t`
-    * hyperplane constants. The SINGLE source of the bucket definition —
+    * bucket)` projection per table, each bucketed by
+    * [[Similarity.lshBucket]] (the bucket definition [[Similarity.lshTopK]]
+    * shares). The single source of the per-table union —
     * the pair generators (p22/p32/p86/p88), the occupancy monitor
     * (p102), and the salted variant (p103) must all agree on it for
     * "the profile prices the real index" and "salted ≡ unsalted" to
@@ -792,11 +793,8 @@ object Dedup {
   private def lshBucketed(data: DataFrame, vec: Column, dim: Int,
                           planesPerTable: Int, tables: Int): DataFrame =
     (0 until tables).map { t =>
-      val planes = Similarity.hyperplanes(planesPerTable, dim, seed = 7L + t)
-      val bucket = planes.zipWithIndex.map { case (p, i) =>
-        Similarity.signBit(vec, p, i)
-      }.reduce((a, b) => a.bitwiseOR(b))
-      data.select(col("*"), lit(t).as("tbl"), bucket.as("bucket"))
+      data.select(col("*"), lit(t).as("tbl"),
+        Similarity.lshBucket(vec, planesPerTable, dim, t).as("bucket"))
     }.reduce(_ unionByName _)
 
   /** The p102 LSH occupancy monitor as a reusable profile: per table,

@@ -44,8 +44,8 @@ object Similarity {
   }
 
   /** All-pairs top-1 neighbor for a (small/filtered) vector set: broadcast
-    * one side, rank per id. For the full-corpus case use [[lshBuckets]]
-    * first and run this within buckets.
+    * one side, rank per id. For the full-corpus case bucket with
+    * [[lshBucket]] first and run this within buckets.
     */
   def nearestNeighbor(df: DataFrame, id: Column, vec: Column, roundTo: Int = 6): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -585,16 +585,16 @@ object Similarity {
   private[graft] def signBit(vec: Column, plane: Seq[Double], i: Int): Column =
     when(round(dot(vec, array(plane.map(lit): _*)), 6) > 0, lit(1L << i)).otherwise(lit(0L))
 
-  /** Random-hyperplane signature: bit `p` = sign of `v · plane_p`.
-    * Returns `(id, bucket)` where bucket packs the sign bits — vectors in
-    * the same bucket are ANN candidates.
+  /** Sign-LSH bucket of `vec` in hyperplane table `table`: bit `i` =
+    * sign of `vec · plane_i` over the `seed = 7 + table` planes. Vectors
+    * in the same bucket of one table are ANN candidates; every LSH path
+    * ([[lshTopK]], the [[Dedup]] pair generators and occupancy monitor)
+    * buckets through this one expression.
     */
-  def lshBuckets(df: DataFrame, id: Column, vec: Column, numPlanes: Int, dim: Int): DataFrame = {
-    val planes = hyperplanes(numPlanes, dim)
-    val bucket = planes.zipWithIndex.map { case (p, i) => signBit(vec, p, i) }
+  private[graft] def lshBucket(vec: Column, planesPerTable: Int, dim: Int, table: Int): Column =
+    hyperplanes(planesPerTable, dim, seed = 7L + table).zipWithIndex
+      .map { case (p, i) => signBit(vec, p, i) }
       .reduce((a, b) => a.bitwiseOR(b))
-    df.select(id.as("id"), bucket.as("bucket"))
-  }
 
   /** LSH-accelerated ANN: candidates share a bucket in ≥1 of `tables`
     * independent sign-LSH tables; exact cosine re-ranks candidates.
@@ -604,9 +604,7 @@ object Similarity {
               planesPerTable: Int = 8, tables: Int = 4): DataFrame = {
     val qDf = df.sparkSession.range(1).select(array(query.map(lit): _*).as("qv"))
     val withBuckets = (0 until tables).map { t =>
-      val planes = hyperplanes(planesPerTable, dim, seed = 7L + t)
-      def sig(v: Column) = planes.zipWithIndex.map { case (p, i) => signBit(v, p, i) }
-        .reduce((a, b) => a.bitwiseOR(b))
+      def sig(v: Column) = lshBucket(v, planesPerTable, dim, t)
       val data = df.select(id.as("id"), vec.as("v")).withColumn("bucket", sig(col("v"))).withColumn("tbl", lit(t))
       val qb = qDf.select(sig(col("qv")).as("bucket")).withColumn("tbl", lit(t))
       data.join(broadcast(qb), Seq("tbl", "bucket"), "left_semi")

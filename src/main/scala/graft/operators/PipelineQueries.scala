@@ -437,8 +437,8 @@ object PipelineQueries {
   /** Sign-LSH bucket over `vecExpr` for one hyperplane table, as DuckDB
     * SQL with the (deterministic, seeded) plane components inlined as
     * literals — the exact twin of the `when(round(dot(v, plane), 6) > 0,
-    * 1<<i)` column in [[Similarity.signBit]] (used by
-    * [[Similarity.lshBuckets]] / [[Dedup.embeddingNearDupsLsh]]).
+    * 1<<i)` column in [[Similarity.signBit]] (folded per table by
+    * [[Similarity.lshBucket]], used by [[Dedup.embeddingNearDupsLsh]]).
     */
   private def lshBucketSql(vecExpr: String, planes: Seq[Seq[Double]]): String =
     planes.zipWithIndex.map { case (p, i) =>

@@ -45,14 +45,10 @@ object DensestSubgraph {
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import org.apache.spark.sql.graft.CatalystBridge
-    import graft.core.IterPlan.IterDatasetOps
+    import graft.core.IterPlan.{IterDatasetOps, simpleUndirected}
     // keyed("u") + checkpoint leaf: the per-round u-side restriction
     // join runs zero-exchange off the checkpointed partitioning
-    var cur = edges
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct().keyed("u").lckpt()
+    var cur = simpleUndirected(edges).keyed("u").lckpt()
     val summaries = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Long)]
     var round = 0
     var done = false

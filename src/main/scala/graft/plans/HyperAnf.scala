@@ -98,15 +98,12 @@ object HyperAnf {
     */
   def trajectory(edges: DataFrame, maxRounds: Int,
                  salt: String = "anf:"): DataFrame = {
-    import graft.core.IterPlan.IterDatasetOps
+    import graft.core.IterPlan.{IterDatasetOps, simpleUndirected}
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val und = edges
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
+    val und = simpleUndirected(edges)
     val adj = und.select(col("u").as("x"), col("v").as("y"))
       .unionAll(und.select(col("v").as("x"), col("u").as("y")))
     val vertices = adj.select(col("x")).distinct()

@@ -46,17 +46,13 @@ object KCore {
     val spark = edges.sparkSession
     import org.apache.spark.sql.graft.CatalystBridge
     import spark.implicits._
-    import graft.core.IterPlan.IterDatasetOps
+    import graft.core.IterPlan.{IterDatasetOps, simpleUndirected}
     // canonicalize: undirected edge identity is the unordered pair, so
     // both orientations collapse to one row and self-loops drop (a
     // loop can't help a vertex clear a neighbor-count bar)
     // keyed("u") + checkpoint leaf: the per-round u-side restriction
     // join runs zero-exchange off the checkpointed partitioning
-    var cur = edges
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct().keyed("u").lckpt()
+    var cur = simpleUndirected(edges).keyed("u").lckpt()
     // alive tracks NOT-YET-PEELED vertices explicitly: a vertex whose
     // last edge vanished (all neighbors peeled) has degree 0 — absent
     // from the degree table — yet must still be peeled in the next

@@ -37,7 +37,7 @@ object KTruss {
     */
   def peelSummary(edges: DataFrame, k: Int, maxRounds: Int,
                   tri0: Option[DataFrame] = None): DataFrame = {
-    import graft.core.IterPlan.IterDatasetOps
+    import graft.core.IterPlan.{IterDatasetOps, simpleUndirected}
     require(k >= 3, s"k-truss needs k >= 3: $k")
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
@@ -49,49 +49,18 @@ object KTruss {
     // zero-exchange edge side off the checkpoint leaf's partitioning — the edge
     // set is the corpus-scale table here, and the r17 audit showed the
     // UnknownPartitioning checkpoint leaf re-Exchanging it per round
-    var e = edges
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct().keyed("u", "v").lckpt()
+    var e = simpleUndirected(edges).keyed("u", "v").lckpt()
 
     // triangle list as its three canonical edges, flat long columns —
-    // from the standing artifact when provided (corners are id-sorted,
-    // so the pairs (x1,x2)/(x1,x3)/(x2,x3) ARE the canonical edges),
-    // one-time degree-ordered apex enumeration otherwise
-    var tri = tri0 match {
-      case Some(t) =>
-        t.select(col("x1").as("u1"), col("x2").as("v1"),
-            col("x1").as("u2"), col("x3").as("v2"),
-            col("x2").as("u3"), col("x3").as("v3"))
-          .keyed("u1", "v1")
-          .lckpt()
-      case None =>
-        val deg = e.select(col("u").as("x"))
-          .unionAll(e.select(col("v").as("x")))
-          .groupBy("x").agg(count(lit(1)).as("d"))
-        val withDegs = e
-          .join(deg.withColumnsRenamed(Map("x" -> "u", "d" -> "du")), "u")
-          .join(deg.withColumnsRenamed(Map("x" -> "v", "d" -> "dv")), "v")
-        val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
-        val oriented = withDegs.select(
-          when(uFirst, col("u")).otherwise(col("v")).as("sid"),
-          when(uFirst, col("v")).otherwise(col("u")).as("tid"),
-          when(uFirst, col("dv")).otherwise(col("du")).as("td"))
-          .lckpt()
-        val e1 = oriented.select(col("sid").as("a"), col("tid").as("b"), col("td").as("bd"))
-        val e2 = oriented.select(col("sid").as("a2"), col("tid").as("c"), col("td").as("cd"))
-        val wedges = e1.join(e2, col("a") === col("a2") &&
-            (col("bd") < col("cd") || (col("bd") === col("cd") && col("b") < col("c"))))
-          .select(col("a"), col("b").as("wb"), col("c").as("wc"))
-        val closing = oriented.select(col("sid").as("cb"), col("tid").as("cc"))
-        wedges.join(closing, col("wb") === col("cb") && col("wc") === col("cc"))
-          .select(
-            least(col("a"), col("wb")).as("u1"), greatest(col("a"), col("wb")).as("v1"),
-            least(col("a"), col("wc")).as("u2"), greatest(col("a"), col("wc")).as("v2"),
-            least(col("wb"), col("wc")).as("u3"), greatest(col("wb"), col("wc")).as("v3"))
-          .keyed("u1", "v1")
-          .lckpt()
-    }
+    // from the standing artifact when provided, enumerated once
+    // otherwise (corners are id-sorted, so the pairs (x1,x2)/(x1,x3)/
+    // (x2,x3) ARE the canonical edges)
+    var tri = tri0.getOrElse(Triangles.triangleList(e))
+      .select(col("x1").as("u1"), col("x2").as("v1"),
+        col("x1").as("u2"), col("x3").as("v2"),
+        col("x2").as("u3"), col("x3").as("v3"))
+      .keyed("u1", "v1")
+      .lckpt()
 
     def supports(t: DataFrame): DataFrame =
       t.select(explode(array(

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.core.Ckpt._
-import graft.core.IterPlan.IterDatasetOps
+import graft.core.IterPlan.{IterDatasetOps, simpleUndirected}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -472,15 +472,11 @@ object Matching {
     */
   def trajectory(edges: DataFrame, maxRounds: Int,
                  salt: String = "match:"): DataFrame = {
-    import graft.core.IterPlan.IterDatasetOps
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import spark.implicits._
 
-    var e = edges
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
+    var e = simpleUndirected(edges)
       .select(col("u"), col("v"),
         md5(concat(lit(salt), col("u").cast("string"), lit(":"),
           col("v").cast("string"))).as("pe"))

@@ -64,15 +64,12 @@ object Mis {
   def trajectory(edges: DataFrame, maxRounds: Int,
                  salt: String = "mis:",
                  forcePacked: Option[Boolean] = None): DataFrame = {
-    import graft.core.IterPlan.IterDatasetOps
+    import graft.core.IterPlan.{IterDatasetOps, simpleUndirected}
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val und = edges
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
+    val und = simpleUndirected(edges)
     // both directions: one row per (vertex, neighbor) — the shape the
     // per-vertex neighborhood minimum aggregates over. keyed("x") +
     // checkpoint leaf: the x-side probes (selected-neighborhood, the

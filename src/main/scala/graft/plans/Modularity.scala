@@ -38,11 +38,7 @@ object Modularity {
     * internal_edges, q_micro)` — exact integers.
     */
   def score(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val ce = edges
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-      .lckpt()
+    val ce = graft.core.IterPlan.simpleUndirected(edges).lckpt()
     val lab = labels.select(col("key"), col("label"))
     val verts = ce.select(col("u").as("x")).unionAll(ce.select(col("v").as("x")))
     val deg = verts.groupBy("x").agg(count(lit(1)).as("d"))

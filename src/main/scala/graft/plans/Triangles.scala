@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.core.Ckpt._
+import graft.core.IterPlan.simpleUndirected
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,10 +18,9 @@ import org.apache.spark.sql.functions._
   * "last reducer"); oriented, it emits at most ~m. Every step is a hash
   * aggregate or hash join in whole-stage codegen — no driver iteration.
   *
-  * Counting is exact: each triangle has exactly one vertex with oriented
-  * out-edges to the other two (its (degree, id)-minimum), so joining the
-  * wedge (a→b, a→c) with the oriented closing edge (b→c) counts each
-  * triangle once.
+  * One enumerator ([[apexTriangles]]) finds each triangle exactly once;
+  * the census, the per-node features and the triangle list are views of
+  * its output (or of a stored list) and share no enumeration code.
   */
 object Triangles {
 
@@ -74,28 +74,16 @@ object Triangles {
                            threshold: Long = splitCountsEdgeThreshold): Boolean =
     standingEdges.exists(_ >= threshold)
 
-  /** Global counts for the undirected simple graph induced by `edges`
-    * (any orientation, duplicates and self-loops tolerated — the edge
-    * set is canonicalized first). Input columns: `u`, `v` (any orderable
-    * type). Output: one row `(n_edges, n_wedges, n_triangles)` — wedges
-    * are unordered neighbor pairs Σ d(d−1)/2, the denominator of the
-    * global clustering coefficient 3·triangles / wedges.
-    */
-  /** Canonicalize + degree + degree-ordered orientation — shared by the
-    * global census ([[counts]]) and the per-node form
-    * ([[perNodeCounts]]).
+  /** Canonicalize + degree — shared by every form that enumerates
+    * ([[counts]], [[perNodeCounts]], [[triangleList]]) or reads degrees
+    * beside a stored list.
     */
   private def prep(edges: DataFrame): (DataFrame, DataFrame) = {
-    // canonical simple undirected edges: least endpoint first, loops out.
     // localCheckpoint: the canonical edge set feeds the degree aggregate,
     // both orientation joins, and (via `oriented`) three downstream scans —
     // without the lineage cut the caller's edge derivation (for g36, a
     // lineitem self-join + distinct) re-executes per consumer.
-    val und = edges
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-      .lckpt()
+    val und = simpleUndirected(edges).lckpt()
 
     val deg = und.select(col("u").as("x"))
       .unionAll(und.select(col("v").as("x")))
@@ -104,21 +92,30 @@ object Triangles {
     (und, deg)
   }
 
-  def counts(edges: DataFrame): DataFrame = {
-    val (und, deg) = prep(edges)
+  /** The (degree, id) total order over an edge `(u, v)` carrying its
+    * endpoint degrees `du`/`dv`: true iff `u` comes first.
+    */
+  private val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
 
+  /** THE triangle enumerator: each triangle of the canonical graph `und`
+    * (degrees `deg` `(x, d)`) exactly once, as `(a, wb, wc)` with `a` the
+    * apex. Exact because each triangle has exactly one vertex with
+    * oriented out-edges to the other two (its (degree, id)-minimum), so
+    * joining the wedge (a→b, a→c) with the oriented closing edge (b→c)
+    * finds it once.
+    */
+  private def apexTriangles(und: DataFrame, deg: DataFrame): DataFrame = {
     // orient by the total order (degree, id): src = smaller endpoint.
     // Kept as FLAT columns — the apex id alone is the wedge join key (an
     // id determines its degree), and long-keyed hash joins beat
     // struct-keyed ones; the head's degree rides along only for ordering.
-    val withDegs = und
+    val oriented = und
       .join(deg.withColumnsRenamed(Map("x" -> "u", "d" -> "du")), "u")
       .join(deg.withColumnsRenamed(Map("x" -> "v", "d" -> "dv")), "v")
-    val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
-    val oriented = withDegs.select(
-      when(uFirst, col("u")).otherwise(col("v")).as("sid"),
-      when(uFirst, col("v")).otherwise(col("u")).as("tid"),
-      when(uFirst, col("dv")).otherwise(col("du")).as("td"))
+      .select(
+        when(uFirst, col("u")).otherwise(col("v")).as("sid"),
+        when(uFirst, col("v")).otherwise(col("u")).as("tid"),
+        when(uFirst, col("dv")).otherwise(col("du")).as("td"))
       .lckpt()
 
     // wedges at each apex: ordered pairs of out-neighbors, b before c in
@@ -129,14 +126,18 @@ object Triangles {
     val e2 = oriented.select(col("sid").as("a2"), col("tid").as("c"), col("td").as("cd"))
     val wedges = e1.join(e2, col("a") === col("a2") &&
         (col("bd") < col("cd") || (col("bd") === col("cd") && col("b") < col("c"))))
-      .select(col("b").as("wb"), col("c").as("wc"))
+      .select(col("a"), col("b").as("wb"), col("c").as("wc"))
 
     // close the wedge with the oriented edge b→c (b <ord c by construction)
     val closing = oriented.select(col("sid").as("cb"), col("tid").as("cc"))
-    val nTriangles = wedges.join(closing,
-        col("wb") === col("cb") && col("wc") === col("cc"))
-      .agg(count(lit(1)).as("n_triangles"))
+    wedges.join(closing, col("wb") === col("cb") && col("wc") === col("cc"))
+      .select(col("a"), col("wb"), col("wc"))
+  }
 
+  /** One census row from degrees `deg` `(x, d)` and any one-row-per-
+    * triangle frame `tri`.
+    */
+  private def census(deg: DataFrame, tri: DataFrame): DataFrame = {
     // edges = Σd/2 and wedges = Σ d(d−1)/2 fall out of ONE pass over the
     // degree table; shiftright keeps the arithmetic in exact longs (float
     // division would round above 2^53 on hub-heavy degree sequences).
@@ -146,7 +147,58 @@ object Triangles {
       coalesce(shiftright(sum(col("d")), 1), lit(0L)).as("n_edges"),
       coalesce(sum(shiftright(col("d") * (col("d") - 1), 1)), lit(0L))
         .as("n_wedges"))
-    edgeWedge.crossJoin(nTriangles)
+    edgeWedge.crossJoin(tri.agg(count(lit(1)).as("n_triangles")))
+  }
+
+  /** Per-node rows from degrees `deg` `(x, d)` and a one-row-per-
+    * triangle frame `tri` with corner columns `a`, `b`, `c`.
+    */
+  private def perNode(deg: DataFrame, tri: DataFrame, a: String, b: String,
+                      c: String): DataFrame = {
+    val perX = tri.select(explode(array(col(a), col(b), col(c))).as("x"))
+      .groupBy("x").agg(count(lit(1)).as("tri"))
+    deg.join(perX, Seq("x"), "left")
+      .select(col("x"), col("d").as("degree"),
+        coalesce(col("tri"), lit(0L)).as("n_triangles"),
+        when(col("d") >= 2,
+          expr("2000L * coalesce(tri, 0L) div (d * (d - 1L))"))
+          .otherwise(lit(0L)).as("cc_permille"))
+  }
+
+  /** `(x1 < x2 < x3)` from three unordered corner columns of `tri`. */
+  private def sortedCorners(tri: DataFrame, a: String, b: String, c: String): DataFrame =
+    tri.select(expr(s"array_sort(array($a, $b, $c))").as("t"))
+      .select(col("t").getItem(0).as("x1"), col("t").getItem(1).as("x2"),
+        col("t").getItem(2).as("x3"))
+
+  /** Global counts for the undirected simple graph induced by `edges`
+    * (any orientation, duplicates and self-loops tolerated — the edge
+    * set is canonicalized first). Input columns: `u`, `v` (any orderable
+    * type). Output: one row `(n_edges, n_wedges, n_triangles)` — wedges
+    * are unordered neighbor pairs Σ d(d−1)/2, the denominator of the
+    * global clustering coefficient 3·triangles / wedges.
+    */
+  def counts(edges: DataFrame): DataFrame = {
+    val (und, deg) = prep(edges)
+    census(deg, apexTriangles(und, deg))
+  }
+
+  /** The DOULION coin as its own plan stage: canonicalize to the simple
+    * undirected edge set, then keep each edge iff its deterministic
+    * md5-threshold hash clears `p`. Exposed separately from
+    * [[approxCounts]] so the plan audit can pin the load-bearing shape —
+    * the coin is a per-row `Filter` on the edge derivation itself, below
+    * every wedge join, which is the only place the `p²` wedge-mass saving
+    * can happen (a coin above a pair join would sample the OUTPUT and
+    * save nothing).
+    */
+  def sparsify(edges: DataFrame, p: Double,
+               salt: String = "doulion:"): DataFrame = {
+    require(p > 0.0 && p <= 1.0, s"sampling probability in (0,1]: $p")
+    simpleUndirected(edges)
+      .filter(
+        graft.functions.Sampling.hash01(
+          concat(col("u").cast("string"), lit("_"), col("v").cast("string")), salt) < p)
   }
 
   /** DOULION-style APPROXIMATE triangle census (Tsourakakis et al.,
@@ -172,27 +224,6 @@ object Triangles {
     * Output: one row `(n_edges_sampled, n_triangles_sampled,
     * est_triangles)`.
     */
-  /** The DOULION coin as its own plan stage: canonicalize to the simple
-    * undirected edge set, then keep each edge iff its deterministic
-    * md5-threshold hash clears `p`. Exposed separately from
-    * [[approxCounts]] so the plan audit can pin the load-bearing shape —
-    * the coin is a per-row `Filter` on the edge derivation itself, below
-    * every wedge join, which is the only place the `p²` wedge-mass saving
-    * can happen (a coin above a pair join would sample the OUTPUT and
-    * save nothing).
-    */
-  def sparsify(edges: DataFrame, p: Double,
-               salt: String = "doulion:"): DataFrame = {
-    require(p > 0.0 && p <= 1.0, s"sampling probability in (0,1]: $p")
-    edges
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-      .filter(
-        graft.functions.Sampling.hash01(
-          concat(col("u").cast("string"), lit("_"), col("v").cast("string")), salt) < p)
-  }
-
   def approxCounts(edges: DataFrame, p: Double = 0.5,
                    salt: String = "doulion:"): DataFrame = {
     counts(sparsify(edges, p, salt)).select(
@@ -225,25 +256,11 @@ object Triangles {
     */
   def incrementalCounts(base: DataFrame, delta: DataFrame,
                         salt: String = "ie:"): DataFrame = {
-    def canon(df: DataFrame) = df
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-    val b = canon(base).lckpt()
+    val b = simpleUndirected(base).lckpt()
     incrementalCountsFrom(b, delta,
       counts(b).select(col("n_triangles").as("t_base")), salt)
   }
 
-  /** The STANDING-ARTIFACT form of [[incrementalCounts]]: the base edge
-    * list arrives ALREADY canonical (`u < v`, distinct, no loops — e.g.
-    * a bucketed store scan) and the base census arrives as a prebuilt
-    * 1-row `(t_base)` (e.g. a count over the stored [[triangleList]]),
-    * so a refresh costs ONLY the delta attribution — Σ min-degree over
-    * the delta against the standing adjacency — never a base re-census.
-    * [[incrementalCounts]] (which rebuilds both inline so the query is
-    * self-contained) is the audit twin; this is the shape a deployment
-    * actually runs, and the two are oracle-identical by construction.
-    */
   /** Shared delta-attribution machinery: canonicalize + anti-join the
     * delta, build the labeled merged adjacency, and enumerate each NEW
     * triangle exactly once (by its maximal delta edge), keeping all
@@ -253,11 +270,7 @@ object Triangles {
     */
   private def deltaAttributed(b: DataFrame, delta: DataFrame, salt: String,
                               baseMirrored: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    def canon(df: DataFrame) = df
-      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-    val d = canon(delta).join(b, Seq("u", "v"), "left_anti")
+    val d = simpleUndirected(delta).join(b, Seq("u", "v"), "left_anti")
       .select(col("u"), col("v"),
         md5(concat(lit(salt), col("u").cast("string"), lit(":"),
           col("v").cast("string"))).as("k"))
@@ -302,7 +315,6 @@ object Triangles {
         val dd0 = d
           .join(deg.select(col("x").as("u"), col("dg").as("du")), "u")
           .join(deg.select(col("x").as("v"), col("dg").as("dv")), "v")
-        val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
         val pivots = dd0.select(
           when(uFirst, col("u")).otherwise(col("v")).as("pv"),
           when(uFirst, col("v")).otherwise(col("u")).as("ot"),
@@ -352,7 +364,6 @@ object Triangles {
         val dd = d
           .join(deg.select(col("x").as("u"), col("dg").as("du")), "u")
           .join(deg.select(col("x").as("v"), col("dg").as("dv")), "v")
-        val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
         val pivots = dd.select(
           when(uFirst, col("u")).otherwise(col("v")).as("pv"),
           when(uFirst, col("v")).otherwise(col("u")).as("ot"),
@@ -389,11 +400,18 @@ object Triangles {
   def incrementalTriangleList(b: DataFrame, delta: DataFrame,
                               salt: String = "ie:",
                               baseMirrored: Option[DataFrame] = None): DataFrame =
-    deltaAttributed(b, delta, salt, baseMirrored)._2
-      .select(expr("array_sort(array(pv, ot, w))").as("t"))
-      .select(col("t").getItem(0).as("x1"), col("t").getItem(1).as("x2"),
-        col("t").getItem(2).as("x3"))
+    sortedCorners(deltaAttributed(b, delta, salt, baseMirrored)._2, "pv", "ot", "w")
 
+  /** The STANDING-ARTIFACT form of [[incrementalCounts]]: the base edge
+    * list arrives ALREADY canonical (`u < v`, distinct, no loops — e.g.
+    * a bucketed store scan) and the base census arrives as a prebuilt
+    * 1-row `(t_base)` (e.g. a count over the stored [[triangleList]]),
+    * so a refresh costs ONLY the delta attribution — Σ min-degree over
+    * the delta against the standing adjacency — never a base re-census.
+    * [[incrementalCounts]] (which rebuilds both inline so the query is
+    * self-contained) is the audit twin; this is the shape a deployment
+    * actually runs, and the two are oracle-identical by construction.
+    */
   def incrementalCountsFrom(b: DataFrame, delta: DataFrame,
                             tBase0: DataFrame,
                             salt: String = "ie:",
@@ -421,31 +439,7 @@ object Triangles {
     */
   def perNodeCounts(edges: DataFrame): DataFrame = {
     val (und, deg) = prep(edges)
-    val withDegs = und
-      .join(deg.withColumnsRenamed(Map("x" -> "u", "d" -> "du")), "u")
-      .join(deg.withColumnsRenamed(Map("x" -> "v", "d" -> "dv")), "v")
-    val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
-    val oriented = withDegs.select(
-      when(uFirst, col("u")).otherwise(col("v")).as("sid"),
-      when(uFirst, col("v")).otherwise(col("u")).as("tid"),
-      when(uFirst, col("dv")).otherwise(col("du")).as("td"))
-      .lckpt()
-    val e1 = oriented.select(col("sid").as("a"), col("tid").as("b"), col("td").as("bd"))
-    val e2 = oriented.select(col("sid").as("a2"), col("tid").as("c"), col("td").as("cd"))
-    val wedges = e1.join(e2, col("a") === col("a2") &&
-        (col("bd") < col("cd") || (col("bd") === col("cd") && col("b") < col("c"))))
-      .select(col("a"), col("b").as("wb"), col("c").as("wc"))
-    val closing = oriented.select(col("sid").as("cb"), col("tid").as("cc"))
-    val tri = wedges.join(closing,
-        col("wb") === col("cb") && col("wc") === col("cc"))
-      .select(explode(array(col("a"), col("wb"), col("wc"))).as("x"))
-      .groupBy("x").agg(count(lit(1)).as("tri"))
-    deg.join(tri, Seq("x"), "left")
-      .select(col("x"), col("d").as("degree"),
-        coalesce(col("tri"), lit(0L)).as("n_triangles"),
-        when(col("d") >= 2,
-          expr("2000L * coalesce(tri, 0L) div (d * (d - 1L))"))
-          .otherwise(lit(0L)).as("cc_permille"))
+    perNode(deg, apexTriangles(und, deg), "a", "wb", "wc")
   }
 
   /** The canonical TRIANGLE LIST `(x1 < x2 < x3)` — each triangle of the
@@ -460,53 +454,19 @@ object Triangles {
     */
   def triangleList(edges: DataFrame): DataFrame = {
     val (und, deg) = prep(edges)
-    val withDegs = und
-      .join(deg.withColumnsRenamed(Map("x" -> "u", "d" -> "du")), "u")
-      .join(deg.withColumnsRenamed(Map("x" -> "v", "d" -> "dv")), "v")
-    val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
-    val oriented = withDegs.select(
-      when(uFirst, col("u")).otherwise(col("v")).as("sid"),
-      when(uFirst, col("v")).otherwise(col("u")).as("tid"),
-      when(uFirst, col("dv")).otherwise(col("du")).as("td"))
-      .lckpt()
-    val e1 = oriented.select(col("sid").as("a"), col("tid").as("b"), col("td").as("bd"))
-    val e2 = oriented.select(col("sid").as("a2"), col("tid").as("c"), col("td").as("cd"))
-    val wedges = e1.join(e2, col("a") === col("a2") &&
-        (col("bd") < col("cd") || (col("bd") === col("cd") && col("b") < col("c"))))
-      .select(col("a"), col("b").as("wb"), col("c").as("wc"))
-    val closing = oriented.select(col("sid").as("cb"), col("tid").as("cc"))
-    wedges.join(closing, col("wb") === col("cb") && col("wc") === col("cc"))
-      .select(expr("array_sort(array(a, wb, wc))").as("t"))
-      .select(col("t").getItem(0).as("x1"), col("t").getItem(1).as("x2"),
-        col("t").getItem(2).as("x3"))
+    sortedCorners(apexTriangles(und, deg), "a", "wb", "wc")
   }
 
   /** [[counts]] census read off a prebuilt (memoized) [[triangleList]]:
     * edges/wedges from one degree pass over `edges`, the triangle count
     * from the standing list — no wedge join.
     */
-  def countsFromList(edges: DataFrame, tri: DataFrame): DataFrame = {
-    val (_, deg) = prep(edges)
-    val edgeWedge = deg.agg(
-      coalesce(shiftright(sum(col("d")), 1), lit(0L)).as("n_edges"),
-      coalesce(sum(shiftright(col("d") * (col("d") - 1), 1)), lit(0L))
-        .as("n_wedges"))
-    edgeWedge.crossJoin(tri.agg(count(lit(1)).as("n_triangles")))
-  }
+  def countsFromList(edges: DataFrame, tri: DataFrame): DataFrame =
+    census(prep(edges)._2, tri)
 
   /** [[perNodeCounts]] read off a prebuilt [[triangleList]]: one corner
     * explode + count against the standing list, joined to degrees.
     */
-  def perNodeCountsFromList(edges: DataFrame, tri0: DataFrame): DataFrame = {
-    val (_, deg) = prep(edges)
-    val tri = tri0
-      .select(explode(array(col("x1"), col("x2"), col("x3"))).as("x"))
-      .groupBy("x").agg(count(lit(1)).as("tri"))
-    deg.join(tri, Seq("x"), "left")
-      .select(col("x"), col("d").as("degree"),
-        coalesce(col("tri"), lit(0L)).as("n_triangles"),
-        when(col("d") >= 2,
-          expr("2000L * coalesce(tri, 0L) div (d * (d - 1L))"))
-          .otherwise(lit(0L)).as("cc_permille"))
-  }
+  def perNodeCountsFromList(edges: DataFrame, tri0: DataFrame): DataFrame =
+    perNode(prep(edges)._2, tri0, "x1", "x2", "x3")
 }

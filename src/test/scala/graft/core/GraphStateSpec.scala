@@ -170,19 +170,4 @@ class GraphStateSpec extends SparkSpec {
     assert(exact == 5000L)
     assert(math.abs(approx - exact).toDouble / exact < 0.05, s"approx=$approx")
   }
-
-  test("compact merges many small append files into few, preserving data") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
-    // simulate 10 micro-batch appends, several files each
-    for (b <- 0 until 10)
-      spark.range(b * 100L, (b + 1) * 100L).repartition(4)
-        .write.mode("append").parquet(dir)
-    val before = spark.read.parquet(dir)
-    val beforeRows = before.collect().map(_.getLong(0)).sorted.toSeq
-    val (nBefore, nAfter) = GraphIO.compact(spark, dir, targetFileMB = 128)
-    assert(nBefore >= 40 && nAfter < nBefore && nAfter <= 2, s"$nBefore -> $nAfter")
-    val afterRows = spark.read.parquet(dir).collect().map(_.getLong(0)).sorted.toSeq
-    assert(afterRows == beforeRows)
-  }
 }

@@ -105,4 +105,20 @@ class IterPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(collect(keyedSide) { case s: SortExec => s }.isEmpty, plan.toString)
     }
   }
+
+  test("simpleUndirected: one row per unordered pair, least endpoint first, loops and nulls out") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.IsNotNull
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(2L), Some(1L)), (Some(1L), Some(2L)), (Some(2L), Some(1L)),
+      (Some(3L), Some(3L)), (None, Some(4L)), (Some(5L), None), (None, None),
+      (Some(9L), Some(4L))).toDF("u", "v").lckpt()
+    val und = IterPlan.simpleUndirected(edges)
+    assert(und.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted ==
+      Seq((1L, 2L), (4L, 9L)))
+    val conds = und.queryExecution.optimizedPlan.collect { case f: Filter => f.condition }
+    assert(conds.nonEmpty)
+    assert(!conds.exists(_.exists(_.isInstanceOf[IsNotNull])), conds.mkString("; "))
+  }
 }

@@ -5,38 +5,7 @@ import org.apache.spark.sql.functions._
 
 class KTrussSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Sequential reference: round-synchronous truss peel returning the
-    * (n_edges, sum_support) trajectory, with converged rounds repeating
-    * the fixpoint — the operator's documented contract.
-    */
-  private def reference(edges: Seq[(Long, Long)], k: Int, rounds: Int): Seq[(Int, Long, Long)] = {
-    val minSup = k - 2
-    var e = edges.map(p => (math.min(p._1, p._2), math.max(p._1, p._2)))
-      .filter(p => p._1 != p._2).distinct.toSet
-    def supports(es: Set[(Long, Long)]): Map[(Long, Long), Int] = {
-      val nodes = es.flatMap(p => Seq(p._1, p._2)).toSeq.sorted
-      val triangles = for {
-        a <- nodes; b <- nodes if a < b && es(a -> b)
-        c <- nodes if b < c && es(b -> c) && es(a -> c)
-      } yield (a, b, c)
-      triangles.flatMap { case (a, b, c) => Seq(a -> b, a -> c, b -> c) }
-        .groupBy(identity).map { case (kk, v) => kk -> v.size }
-    }
-    val out = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
-    var converged = false
-    for (r <- 1 to rounds) {
-      if (converged) out += ((r, out.last._2, out.last._3))
-      else {
-        val sup = supports(e)
-        val kept = e.filter(p => sup.getOrElse(p, 0) >= minSup)
-        out += ((r, kept.size.toLong, kept.toSeq.map(p => sup(p).toLong).sum))
-        converged = kept.size == e.size
-        e = kept
-      }
-    }
-    out.toSeq
-  }
+  import KTrussSpec.reference
 
   private def run(edges: Seq[(Long, Long)], k: Int, rounds: Int) =
     KTruss.peelSummary(edges.toDF("u", "v"), k, rounds)
@@ -69,5 +38,40 @@ class KTrussSpec extends SparkSpec {
       val want = reference(edges, k = 4, rounds = 4)
       assert(got == want, s"trial $trial: $got != $want")
     }
+  }
+}
+
+object KTrussSpec {
+
+  /** Sequential reference: round-synchronous truss peel returning the
+    * (n_edges, sum_support) trajectory, with converged rounds repeating
+    * the fixpoint — the operator's documented contract.
+    */
+  def reference(edges: Seq[(Long, Long)], k: Int, rounds: Int): Seq[(Int, Long, Long)] = {
+    val minSup = k - 2
+    var e = edges.map(p => (math.min(p._1, p._2), math.max(p._1, p._2)))
+      .filter(p => p._1 != p._2).distinct.toSet
+    def supports(es: Set[(Long, Long)]): Map[(Long, Long), Int] = {
+      val nodes = es.flatMap(p => Seq(p._1, p._2)).toSeq.sorted
+      val triangles = for {
+        a <- nodes; b <- nodes if a < b && es(a -> b)
+        c <- nodes if b < c && es(b -> c) && es(a -> c)
+      } yield (a, b, c)
+      triangles.flatMap { case (a, b, c) => Seq(a -> b, a -> c, b -> c) }
+        .groupBy(identity).map { case (kk, v) => kk -> v.size }
+    }
+    val out = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
+    var converged = false
+    for (r <- 1 to rounds) {
+      if (converged) out += ((r, out.last._2, out.last._3))
+      else {
+        val sup = supports(e)
+        val kept = e.filter(p => sup.getOrElse(p, 0) >= minSup)
+        out += ((r, kept.size.toLong, kept.toSeq.map(p => sup(p).toLong).sum))
+        converged = kept.size == e.size
+        e = kept
+      }
+    }
+    out.toSeq
   }
 }

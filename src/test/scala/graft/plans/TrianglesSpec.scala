@@ -10,16 +10,38 @@ class TrianglesSpec extends SparkSpec {
     * three edges present.
     */
   private def ref(edges: Seq[(Long, Long)]): (Long, Long, Long) = {
-    val und = edges.filter(e => e._1 != e._2)
+    val und = simple(edges)
+    val deg = refDegrees(edges).values
+    (und.size.toLong, deg.map(d => d * (d - 1) / 2).sum, refList(edges).size.toLong)
+  }
+
+  private def simple(edges: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    edges.filter(e => e._1 != e._2)
       .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
-    val es = und.toSet
-    val vs = und.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-    val deg = vs.map(v => und.count(e => e._1 == v || e._2 == v).toLong)
-    val tris = (for {
+
+  private def refDegrees(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    simple(edges).flatMap(e => Seq(e._1, e._2)).groupBy(identity)
+      .map { case (v, vs) => v -> vs.size.toLong }
+
+  /** Brute-force triangle list: every vertex triple `(x1 < x2 < x3)`
+    * with all three edges present. */
+  private def refList(edges: Seq[(Long, Long)]): Seq[(Long, Long, Long)] = {
+    val es = simple(edges).toSet
+    val vs = es.flatMap(e => Seq(e._1, e._2)).toSeq.sorted
+    for {
       i <- vs.indices; j <- (i + 1) until vs.size; k <- (j + 1) until vs.size
       if es((vs(i), vs(j))) && es((vs(i), vs(k))) && es((vs(j), vs(k)))
-    } yield 1).size.toLong
-    (und.size.toLong, deg.map(d => d * (d - 1) / 2).sum, tris)
+    } yield (vs(i), vs(j), vs(k))
+  }
+
+  /** Brute-force per-node features `(x, degree, n_triangles, cc_permille)`. */
+  private def refPerNode(edges: Seq[(Long, Long)]): Seq[(Long, Long, Long, Long)] = {
+    val tri = refList(edges).flatMap(t => Seq(t._1, t._2, t._3))
+      .groupBy(identity).map { case (v, vs) => v -> vs.size.toLong }
+    refDegrees(edges).toSeq.sorted.map { case (x, d) =>
+      val t = tri.getOrElse(x, 0L)
+      (x, d, t, if (d >= 2) 2000L * t / (d * (d - 1)) else 0L)
+    }
   }
 
   private def counts(edges: Seq[(Long, Long)]): (Long, Long, Long) = {
@@ -53,26 +75,33 @@ class TrianglesSpec extends SparkSpec {
   }
 
   test("triangleList consumers == direct forms on random graphs (census, per-node, peel)") {
+    // every form shares one enumerator, so each is checked against an
+    // independent brute-force reference rather than against another form
     val rng = new scala.util.Random(41L)
     for (trial <- 1 to 3) {
       val n = 10 + rng.nextInt(10)
       val edges = Seq.fill(4 * n)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
       val df = edges.toDF("u", "v")
       val tri = Triangles.triangleList(df)
-      // every listed triangle has strictly sorted corners (each once)
-      assert(tri.filter(!(col("x1") < col("x2") && col("x2") < col("x3"))).isEmpty)
-      assert(tri.count() == tri.distinct().count(), s"trial $trial dup triangles")
-      assert(Triangles.countsFromList(df, tri).collect()(0).toSeq ==
-        Triangles.counts(df).collect()(0).toSeq, s"trial $trial census")
-      val a = Triangles.perNodeCounts(df).orderBy("x").collect().map(_.toSeq).toSeq
-      val b = Triangles.perNodeCountsFromList(df, tri).orderBy("x")
-        .collect().map(_.toSeq).toSeq
-      assert(a == b, s"trial $trial per-node")
-      val p1 = KTruss.peelSummary(df, k = 3, maxRounds = 3)
-        .orderBy("round").collect().map(_.toSeq).toSeq
-      val p2 = KTruss.peelSummary(df, k = 3, maxRounds = 3, tri0 = Some(tri))
-        .orderBy("round").collect().map(_.toSeq).toSeq
-      assert(p1 == p2, s"trial $trial peel")
+      assert(tri.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .toSeq.sorted == refList(edges), s"trial $trial list")
+      val census = ref(edges)
+      assert(counts(edges) == census, s"trial $trial census")
+      val fromList = Triangles.countsFromList(df, tri).collect()(0)
+      assert((fromList.getLong(0), fromList.getLong(1), fromList.getLong(2)) == census,
+        s"trial $trial census from list")
+      def perNode(f: org.apache.spark.sql.DataFrame) = f.orderBy("x").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      assert(perNode(Triangles.perNodeCounts(df)) == refPerNode(edges), s"trial $trial per-node")
+      assert(perNode(Triangles.perNodeCountsFromList(df, tri)) == refPerNode(edges),
+        s"trial $trial per-node from list")
+      val want = KTrussSpec.reference(edges, k = 3, rounds = 3)
+      for (t0 <- Seq(None, Some(tri))) {
+        val got = KTruss.peelSummary(df, k = 3, maxRounds = 3, tri0 = t0)
+          .orderBy("round").collect()
+          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+        assert(got == want, s"trial $trial peel (standing list: ${t0.isDefined})")
+      }
     }
   }
 
